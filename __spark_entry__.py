@@ -32,7 +32,6 @@ from entityblockingbysimilarityjoins_spark.operators.overlap_join import (
 from entityblockingbysimilarityjoins_spark.operators.set_join import (
     set_similarity_self_join,
 )
-from entityblockingbysimilarityjoins_spark.operators.topk import topk_via_ta
 from entityblockingbysimilarityjoins_spark.functions.text_stats import (
     fingerprint,
     lang_id,

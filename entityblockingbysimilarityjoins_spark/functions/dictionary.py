@@ -12,13 +12,20 @@ ties arbitrarily; we define the total order ``(count ASC, token ASC)`` so
 blocking keys are reproducible across runs and cluster sizes.
 
 Scale notes:
-- the dictionary build is one groupBy(token).count() shuffle + a distributed
-  two-pass rank: range-partition + sort on (freq, token), then per-partition
-  row_number offset by the cumulative sizes of the preceding partitions. The
-  only global structure is the P-row partition-size table (P = number of
-  range partitions), never the vocabulary itself — no single-task window.
-  The rank is a pure function of the unique total order (freq, token), so
-  tids are identical regardless of where the range boundaries land.
+- the token-frequency aggregate (``token_freqs``) is one explode +
+  groupBy(token) shuffle. Set joins define it once, in the vocabulary probe
+  of ``operators.set_join.resolve_vocab``, and hand that aggregate and the
+  record count the probe also returns to ``rank_vocab``: no recount, and
+  the finished dictionary is never probed again (``rank_vocab`` returns its
+  size). Spark evaluates the aggregate a second time for the rank; caching
+  it would cost every inline-vocabulary join a job.
+- the rank is distributed and two-pass, with no global window: range-partition
+  the vocabulary on (freq, token), sort inside each partition, number the
+  rows in that order, then shift each partition by the sizes of the ones
+  before it. Only the P-row partition-size table (P = number of range
+  partitions) reaches the driver, never the vocabulary. The rank is a pure
+  function of the unique total order (freq, token), so tids are identical
+  wherever the range boundaries land.
 - encoding joins the (exploded) corpus with the dictionary: broadcast when it
   fits (``broadcast_threshold``), shuffle hash join otherwise (100 TB corpora
   have vocabularies far beyond broadcast).
@@ -26,9 +33,55 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..operators.cache import persist_tracked
+
+
+def token_freqs(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
+    """(token, freq): occurrences of each token over all records. NULL
+    elements never join an encoding, so they take no tid."""
+    return (
+        df.select(F.explode(tokens_col).alias("token"))
+        .filter(F.col("token").isNotNull())
+        .groupBy("token")
+        .agg(F.count("*").alias("freq"))
+    )
+
+
+def rank_vocab(freqs: DataFrame, n_records: int) -> tuple[DataFrame, int]:
+    """(dictionary, V) from a (token, freq) aggregate: tid 0..V-1 ordered
+    (freq ASC, token ASC), idf = log10(n_records/freq).
+
+    One action: it materializes the persisted range-partitioned vocabulary
+    and collects the P partition sizes. The row index inside a sorted
+    partition is the low 33 bits of ``monotonically_increasing_id`` (its
+    high bits are the partition id), so the dictionary itself is a
+    projection over the cached partitions: no window, no exchange."""
+    sc = freqs.sparkSession.sparkContext
+    n_parts = max(sc.defaultParallelism, 1)
+    parts = (
+        freqs.repartitionByRange(n_parts, F.asc("freq"), F.asc("token"))
+        .sortWithinPartitions("freq", "token")
+        .withColumn("__mid", F.monotonically_increasing_id())
+        .transform(persist_tracked)
+    )
+    pid = F.shiftright("__mid", 33).cast("int")
+    sizes = dict(parts.groupBy(pid.alias("__pid")).count().collect())
+    offsets, total = [], 0
+    for p in range(max(sizes, default=-1) + 1):
+        offsets.append(total)
+        total += sizes.get(p, 0)
+    if not offsets:
+        offsets = [0]
+    idx = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
+    dictionary = parts.select(
+        "token",
+        (F.get(F.lit(offsets), pid) + idx).cast("int").alias("tid"),
+        "freq",
+        F.log10(F.lit(float(n_records)) / F.col("freq")).alias("idf"),
+    )
+    return dictionary, total
 
 
 def build_dictionary(df: DataFrame, tokens_col: str = "tokens", n_records: int | None = None) -> DataFrame:
@@ -39,37 +92,7 @@ def build_dictionary(df: DataFrame, tokens_col: str = "tokens", n_records: int |
     """
     if n_records is None:
         n_records = df.count()
-    freqs = (
-        df.select(F.explode(tokens_col).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("freq"))
-    )
-    # Distributed two-pass rank (no global window): range-sort the vocab,
-    # number rows inside each sorted partition, shift by the cumulative size
-    # of the preceding partitions. Only the P-row size table is windowed
-    # globally; it is broadcast back onto the vocab.
-    sc = df.sparkSession.sparkContext
-    n_parts = max(sc.defaultParallelism, 1)
-    parts = (
-        freqs.repartitionByRange(n_parts, F.asc("freq"), F.asc("token"))
-        .withColumn("__pid", F.spark_partition_id())
-        .transform(persist_tracked)
-    )
-    sizes = parts.groupBy("__pid").agg(F.count("*").alias("__n"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sizes.select(
-        "__pid", F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off")
-    )
-    w_in = Window.partitionBy("__pid").orderBy(F.asc("freq"), F.asc("token"))
-    return (
-        parts.join(F.broadcast(offsets), "__pid")
-        .select(
-            "token",
-            (F.row_number().over(w_in) - 1 + F.col("__off")).cast("int").alias("tid"),
-            "freq",
-            F.log10(F.lit(float(n_records)) / F.col("freq")).alias("idf"),
-        )
-    )
+    return rank_vocab(token_freqs(df, tokens_col), n_records)[0]
 
 
 def encode_tokens(
@@ -135,8 +158,3 @@ def encode_tokens(
     else:
         out = out.drop("__idfs")
     return out
-
-
-def idf_weight(tokens: Column, idf_map: Column) -> Column:
-    """Record weight = sum of token IDFs, as a native aggregate expression."""
-    return F.aggregate(tokens, F.lit(0.0), lambda acc, t: acc + F.coalesce(idf_map[t], F.lit(0.0)))

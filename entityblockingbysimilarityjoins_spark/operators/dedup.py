@@ -239,9 +239,10 @@ def minhash_lsh_pairs(
     # so when the probed vocabulary inlines, each distinct set also carries
     # bitmask words and the exact-Jaccard verify is bit_count arithmetic
     # instead of a string-array intersection per candidate.
-    from .set_join import _inline_vocab_unweighted, _mask_cols, _mask_overlap
+    from .set_join import _mask_cols, _mask_overlap, resolve_vocab
 
-    inline = _inline_vocab_unweighted(slim.select(F.col("toks").alias("tokens")))
+    inline = resolve_vocab(slim.select(F.col("toks").alias("tokens")),
+                           build=False).inline
     if inline is not None:
         tids = F.array_sort(
             F.filter(F.transform("toks",

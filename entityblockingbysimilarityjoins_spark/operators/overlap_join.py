@@ -20,30 +20,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.dictionary import build_dictionary, encode_tokens
+from ..functions.dictionary import encode_tokens
 from .cache import persist_tracked
-from .set_join import (
-    _InlineVocab,
-    _inline_vocab,
-    _inline_vocab_unweighted,
-    _mask_cols,
-    _mask_overlap,
-)
+from .set_join import _InlineVocab, _mask_cols, _mask_overlap, resolve_vocab
 
 
-def _vocab_and_singletons(df_tokens: DataFrame, dictionary: DataFrame | None):
-    """(inline, singleton_tids, dictionary): the one-job probe when no
-    dictionary was supplied (singleton tids derived in Python from the
-    collected freqs), else the probe over the given dictionary with the
-    freq<2 filter as a frame."""
-    if dictionary is None:
-        inline = _inline_vocab_unweighted(df_tokens)
-        if inline is not None:
-            singles = [inline.tid_by_token[t]
-                       for t, f in inline.freqs.items() if f < 2]
-            return inline, singles, None
-        dictionary = build_dictionary(df_tokens)
-    return _inline_vocab(dictionary), None, dictionary
+def _vocab_and_singletons(df_tokens: DataFrame | None, dictionary: DataFrame | None):
+    """(inline, singleton_tids, dictionary) from ``resolve_vocab``: singleton
+    tids derived in Python from the collected freqs when the probed
+    vocabulary inlines, else None (callers filter freq<2 off the
+    dictionary frame)."""
+    vocab = resolve_vocab(df_tokens, dictionary=dictionary)
+    inline = vocab.inline
+    if inline is not None and inline.freqs is not None:
+        singles = [inline.tid_by_token[t] for t, f in inline.freqs.items() if f < 2]
+        return inline, singles, None
+    return inline, None, vocab.dictionary
 
 
 def _prep(df: DataFrame, id_col: str, tokens_col: str, c: int, dictionary: DataFrame,

@@ -9,7 +9,12 @@ canonicalized ``id1 < id2`` (blocker_util.cc:37-108).
 The *algorithm* is Spark-native (AllPairs/PPJoin family) with everything
 after one equi-join fused into a single codegen stage:
 
-1. encode tokens as ints ordered rarest-first (``functions.dictionary``);
+1. resolve the vocabulary in ONE pass (``resolve_vocab``): a single probe
+   job yields the token-frequency aggregate, the record count and the HLL
+   distinct-set count; vocabularies of at most 256 tokens inline as plan
+   literals, larger ones are ranked into the distributed dictionary from
+   that same aggregate and count (``functions.dictionary``) — tokens encode
+   as ints ordered rarest-first either way;
 2. explode two prefixes per record: the **probe** prefix
    (``|x| - ceil(f(t)|x|) + 1`` rarest tokens) and, within it, the
    **indexing** prefix (PPJoin: on the smaller side of any qualifying pair
@@ -24,6 +29,11 @@ after one equi-join fused into a single codegen stage:
    candidates are never materialized or shuffled;
 5. ``dropDuplicates`` only on the verified output (pairs sharing several
    prefix tokens emit duplicates; the verified set is tiny).
+
+Records join as records on this prefix path. Identical token sets are
+grouped only on the all-pairs sweep (tiny vocabulary, few distinct sets),
+whose broadcast square runs over DISTINCT sets; on the prefix path grouping
+lost at every set:record ratio measured.
 
 Scale levers (north_rule: "salted, skew-aware inverted-index self-join"):
 - prefixes hold only the rarest tokens (deterministic freq-ordered ids);
@@ -40,10 +50,10 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.dictionary import build_dictionary, encode_tokens
+from ..functions.dictionary import encode_tokens, rank_vocab, token_freqs
 from .cache import persist_tracked
 
 log = logging.getLogger(__name__)
@@ -126,28 +136,14 @@ MAX_ALLPAIRS_SETS = 8192
 MAX_BITSET_WORDS = 4
 
 
-def _bitset_words(dictionary: DataFrame, weighted: bool) -> int | None:
-    """ceil(V/64) when the unweighted vocab fits MAX_BITSET_WORDS words.
-
-    Weighted joins keep the array path (verification needs per-token IDF
-    sums, not counts). The size probe is a LIMIT count, never a collect."""
-    if weighted:
-        return None
-    cap = MAX_BITSET_WORDS * 64
-    n = dictionary.limit(cap + 1).count()
-    if n > cap:
-        return None
-    return max(1, -(-n // 64))
-
-
 class _InlineVocab:
     """Driver-inlined tiny dictionary: token->tid literal map + idf-by-tid
     literal array. When the probed vocabulary fits MAX_BITSET_WORDS*64
     entries, record encoding becomes a pure projection (map lookup + sort)
     instead of explode + dictionary join + groupBy — removing two exchanges
-    from every join's prepare stage (guide §2.4). The collect is valve-
-    guarded by the same LIMIT probe as the bitset path; big vocabularies
-    never reach the driver."""
+    from every join's prepare stage (guide §2.4). The collect is bounded by
+    ``resolve_vocab``'s LIMIT probe; big vocabularies never reach the
+    driver."""
 
     def __init__(self, rows):
         rows = sorted(rows, key=lambda r: r["tid"])
@@ -160,8 +156,7 @@ class _InlineVocab:
         self.n = len(rows)
         self.n_words = max(1, -(-self.n // 64))
         self.tid_by_token = {r["token"]: int(r["tid"]) for r in rows}
-        self.freqs: dict | None = None  # set by the one-job unweighted probe
-        self.n_sets_approx: int | None = None  # ditto (HLL distinct-set count)
+        self.freqs: dict | None = None  # token -> freq, set by resolve_vocab
 
     def wo_lut(self, w: int, j: int) -> list[float]:
         """256-entry lookup table: byte j of mask word w -> sum of the IDFs
@@ -195,6 +190,9 @@ class _InlineVocab:
 
 
 def _inline_vocab(dictionary: DataFrame) -> _InlineVocab | None:
+    """Inline a CALLER-SUPPLIED dictionary when it fits the cap (LIMIT count
+    probe, then a bounded collect). Dictionaries the joins build themselves
+    never come here: ``resolve_vocab`` already knows their size."""
     cap = MAX_BITSET_WORDS * 64
     if dictionary.limit(cap + 1).count() > cap:
         return None
@@ -204,95 +202,97 @@ def _inline_vocab(dictionary: DataFrame) -> _InlineVocab | None:
     return _InlineVocab(rows)
 
 
-def _inline_vocab_unweighted(tokens_df: DataFrame) -> _InlineVocab | None:
-    """ONE-job inline vocabulary for unweighted joins: collect the (token,
-    freq) pairs under the cap straight off the frequency aggregation and
-    assign tids by the same (freq ASC, token ASC) total order in Python —
-    the whole distributed two-pass rank pipeline (plus its corpus-count and
-    probe jobs) never runs. IDFs are zeroed: no unweighted code path reads
-    them. Returns None (caller falls back to build_dictionary) beyond the
-    cap — the LIMIT bounds the collect either way."""
+class _Vocab:
+    """What a join knows about its vocabulary after ``resolve_vocab``.
+
+    Exactly one of ``inline`` / ``dictionary`` drives the encoding (both are
+    set only when a caller-supplied dictionary inlines). ``n_tokens`` is the
+    exact vocabulary size when known, ``n_sets_approx`` the HLL distinct-set
+    estimate that gates the all-pairs sweep."""
+
+    def __init__(self, inline: _InlineVocab | None = None,
+                 dictionary: DataFrame | None = None,
+                 n_records: int | None = None,
+                 n_sets_approx: int | None = None,
+                 n_tokens: int | None = None):
+        self.inline = inline
+        self.dictionary = dictionary
+        self.n_records = n_records
+        self.n_sets_approx = n_sets_approx
+        self.n_tokens = inline.n if inline is not None else n_tokens
+
+    def drop_hot(self, entries: DataFrame, max_token_freq: int) -> DataFrame:
+        """Prefix entries without the tokens whose corpus frequency exceeds
+        ``max_token_freq`` (the ``tok`` column holds tids)."""
+        if self.dictionary is not None:
+            hot = self.dictionary.filter(F.col("freq") > max_token_freq).select(
+                F.col("tid").alias("tok"))
+            return entries.join(F.broadcast(hot), "tok", "left_anti")
+        inline = self.inline
+        hot = [inline.tid_by_token[t] for t, f in inline.freqs.items()
+               if f > max_token_freq]
+        return entries.filter(~F.col("tok").isin(hot)) if hot else entries
+
+
+def resolve_vocab(
+    tokens_df: DataFrame,
+    weighted: bool = False,
+    dictionary: DataFrame | None = None,
+    build: bool = True,
+) -> _Vocab:
+    """The one vocabulary pass every join shares (``tokens_df``: a
+    ``tokens`` column).
+
+    A caller-supplied ``dictionary`` is only size-probed for inlining.
+    Otherwise ONE probe job computes the (token, freq) aggregate, the record
+    count and the HLL distinct-set count together:
+    - within the cap (MAX_BITSET_WORDS*64 tokens) the collected rows become
+      the inline vocabulary — tids assigned in Python by the dictionary's
+      (freq ASC, token ASC) order; IDFs ``log10(N/freq)`` are evaluated by
+      the JVM (Python's libm log10 differs by 1 ulp on real corpus values)
+      for weighted joins, zero otherwise;
+    - beyond it, with ``build``, the same aggregate and record count feed
+      ``rank_vocab``: no recount, no re-probe of the finished dictionary,
+      and the exact vocabulary size comes back with it. The aggregate is
+      not persisted for this second read: a cached aggregate costs the
+      inline path one more job (AQE materializes a cached relation as its
+      own query stage) and measured no cheaper on the dictionary path,
+      where Spark recomputes the explode + partial aggregate once.
+
+    The count row is unioned FIRST and the union coalesced to one partition,
+    which the LIMIT reads in order: the limit can only ever cut token rows,
+    so a refusing probe still returns both counts (and the probe is one
+    result job however many partitions the aggregate has)."""
+    if dictionary is not None:
+        return _Vocab(inline=_inline_vocab(dictionary), dictionary=dictionary)
     cap = MAX_BITSET_WORDS * 64
-    freqs = (
-        tokens_df.select(F.explode("tokens").alias("token"))
-        .groupBy("token").agg(F.count("*").alias("freq"))
-    )
-    # piggyback an approximate distinct-SET count on the same probe job (one
-    # extra aggregation branch, one action): it gates the all-pairs bitmask
-    # sweep below without a second job. The sentinel row carries token=NULL,
-    # which no tokenizer emits.
-    nsets = tokens_df.agg(
-        F.approx_count_distinct("tokens").alias("freq")).select(
-        F.lit(None).cast(freqs.schema["token"].dataType).alias("token"), "freq")
-    rows = freqs.unionByName(nsets).limit(cap + 3).collect()
-    n_sets_approx = None
-    toks = []
-    for r in rows:
-        if r["token"] is None:
-            n_sets_approx = r["freq"]
+    freqs = token_freqs(tokens_df)
+    counts = tokens_df.agg(
+        F.count("*").alias("freq"),
+        F.approx_count_distinct("tokens").alias("n_sets"),
+    ).select(F.lit(None).cast("string").alias("token"), "freq", "n_sets")
+    rows = (counts.unionByName(freqs, allowMissingColumns=True)
+            .coalesce(1).limit(cap + 2).collect())
+    if rows[0]["n_sets"] is None:
+        raise RuntimeError("resolve_vocab: the count row must come first")
+    n_records, n_sets = rows[0]["freq"], rows[0]["n_sets"]
+    toks = rows[1:]
+    if toks and len(toks) <= cap:
+        ranked = sorted(toks, key=lambda r: (r["freq"], r["token"]))
+        if weighted:
+            spark = tokens_df.sparkSession
+            idf_exprs = [F.log10(F.lit(float(n_records)) / F.lit(int(r["freq"])))
+                         for r in ranked]
+            idfs = spark.range(1).select(F.array(*idf_exprs).alias("a")).first()["a"]
         else:
-            toks.append(r)
-    if not toks or len(toks) > cap:
-        return None
-    ranked = sorted(toks, key=lambda r: (r["freq"], r["token"]))
-    vocab = _InlineVocab([{"token": r["token"], "tid": i, "idf": 0.0}
-                          for i, r in enumerate(ranked)])
-    vocab.freqs = {r["token"]: r["freq"] for r in toks}
-    vocab.n_sets_approx = n_sets_approx
-    return vocab
-
-
-def _inline_vocab_weighted(tokens_df: DataFrame) -> _InlineVocab | None:
-    """ONE-job inline vocabulary for WEIGHTED joins (guide §2.4: the whole
-    distributed dictionary pipeline — corpus count, freq shuffle, range
-    repartition, per-partition rank, offset window, collect — becomes one
-    aggregation job when the vocabulary fits the bitset cap).
-
-    A sentinel '' token appended to every record rides the same explode, so
-    record count and token frequencies come out of ONE groupBy (tokenizers
-    never emit empty strings, so '' cannot collide; null/absent token arrays
-    coalesce to [] and still count one record). IDFs must be bit-identical
-    to build_dictionary's JVM ``log10(N/freq)`` — Python's libm log10
-    differs by 1 ulp on real corpus values — so they are evaluated in one
-    driver-local constant query over the collected freqs (LocalTableScan,
-    no shuffle)."""
-    cap = MAX_BITSET_WORDS * 64
-    freqs = (
-        tokens_df.select(
-            F.explode(
-                F.array_append(F.coalesce(F.col("tokens"),
-                                          F.array().cast("array<string>")),
-                               F.lit(""))).alias("token"))
-        .groupBy("token").agg(F.count("*").alias("freq"))
-    )
-    # piggyback the approximate distinct-SET count (all-pairs sweep gate) on
-    # the same probe job, exactly as the unweighted probe does; the sentinel
-    # row carries token=NULL, which the explode above can never emit.
-    nsets = tokens_df.agg(
-        F.approx_count_distinct("tokens").alias("freq")).select(
-        F.lit(None).cast(freqs.schema["token"].dataType).alias("token"), "freq")
-    rows = freqs.unionByName(nsets).limit(cap + 4).collect()
-    n_records = 0
-    n_sets_approx = None
-    toks = []
-    for r in rows:
-        if r["token"] == "":
-            n_records = r["freq"]
-        elif r["token"] is None:
-            n_sets_approx = r["freq"]
-        else:
-            toks.append(r)
-    if not toks or len(toks) > cap or not n_records:
-        return None
-    ranked = sorted(toks, key=lambda r: (r["freq"], r["token"]))
-    spark = tokens_df.sparkSession
-    idf_exprs = [F.log10(F.lit(float(n_records)) / F.lit(int(r["freq"])))
-                 for r in ranked]
-    idfs = spark.range(1).select(F.array(*idf_exprs).alias("a")).first()["a"]
-    vocab = _InlineVocab([{"token": r["token"], "tid": i, "idf": idfs[i]}
-                          for i, r in enumerate(ranked)])
-    vocab.freqs = {r["token"]: r["freq"] for r in toks}
-    vocab.n_sets_approx = n_sets_approx
+            idfs = [0.0] * len(ranked)  # no unweighted code path reads them
+        inline = _InlineVocab([{"token": r["token"], "tid": i, "idf": idfs[i]}
+                               for i, r in enumerate(ranked)])
+        inline.freqs = {r["token"]: r["freq"] for r in toks}
+        return _Vocab(inline=inline, n_records=n_records, n_sets_approx=n_sets)
+    vocab = _Vocab(n_records=n_records, n_sets_approx=n_sets)
+    if build:
+        vocab.dictionary, vocab.n_tokens = rank_vocab(freqs, n_records)
     return vocab
 
 
@@ -322,24 +322,28 @@ def _mask_overlap(side1: str, side2: str, n_words: int) -> Column:
 
 
 def _idf_literal(
-    dictionary: DataFrame,
+    vocab: _Vocab,
     weighted: bool,
     broadcast_dict: bool,
     max_entries: int | None = None,
 ) -> Column | None:
     """Global tid->idf lookup as an array literal (tids are dense 0..V-1),
-    or None when the vocabulary exceeds the inline cap (size probed with a
-    LIMIT count, never a full collect)."""
+    or None when the vocabulary exceeds the inline cap. The size comes from
+    ``resolve_vocab``; only a caller-supplied dictionary is LIMIT-probed."""
     if not (weighted and broadcast_dict):
         return None
     cap = max_entries if max_entries is not None else MAX_IDF_LITERAL_ENTRIES
-    if dictionary.limit(cap + 1).count() > cap:
+    n = vocab.n_tokens
+    if n is None:
+        n = vocab.dictionary.limit(cap + 1).count()
+    if n > cap:
         log.info(
             "set_join: vocabulary exceeds %d entries — weighted verification "
             "falls back to the per-record idf map", cap,
         )
         return None
-    rows = dictionary.select("tid", "idf").orderBy("tid").collect()
+    rows = sorted(vocab.dictionary.select("tid", "idf").collect(),
+                  key=lambda r: r["tid"])
     return F.lit([float(r["idf"]) for r in rows])
 
 
@@ -441,7 +445,7 @@ def _entries(
     threshold: float,
     weighted: bool,
     max_token_freq: int | None,
-    dictionary: DataFrame,
+    vocab: _Vocab,
     need_idf_map: bool = False,
     n_mask_words: int | None = None,
 ) -> DataFrame:
@@ -501,8 +505,7 @@ def _entries(
             F.col(f"suffix{side}") >= F.lit(fs) * F.col(f"w{side}") - F.lit(_EPS),
         )
     if max_token_freq is not None:
-        hot = dictionary.filter(F.col("freq") > max_token_freq).select(F.col("tid").alias("tok"))
-        e = e.join(F.broadcast(hot), "tok", "left_anti")
+        e = vocab.drop_hot(e, max_token_freq)
         log.warning(
             "set_join: dropping prefix tokens with freq > %d from candidate "
             "generation — recall may drop below the exact contract", max_token_freq,
@@ -523,9 +526,15 @@ def _sim_value(sim: str, weighted: bool, idf_arr: Column | None = None,
             return o / F.sqrt(l1.cast("double") * l2.cast("double"))
         return F.lit(2.0) * o / (l1 + l2)
     if weighted and n_mask_words and inline is not None:
-        # byte-LUT weighted overlap over the mask intersection — codegen
-        wo = inline.weighted_overlap("1", "2")
+        # byte-LUT weighted overlap over the mask intersection — codegen.
+        # Its byte-wise sum order differs from the record weight's tid
+        # order, so identical sets take their full weight as the overlap:
+        # sim is then exactly 1.0, as for grouped identical sets.
         w1, w2 = F.col("w1"), F.col("w2")
+        same = F.col("__bm01") == F.col("__bm02")
+        for w in range(1, n_mask_words):
+            same = same & (F.col(f"__bm{w}1") == F.col(f"__bm{w}2"))
+        wo = F.when(same, w1).otherwise(inline.weighted_overlap("1", "2"))
         if sim == "jac":
             return wo / (w1 + w2 - wo)
         if sim == "cos":
@@ -616,6 +625,38 @@ def _fused_verify(joined: DataFrame, sim: str, threshold: float, weighted: bool,
     return out.dropDuplicates(["id1", "id2"])
 
 
+def _join_vocab(
+    tokens_df: DataFrame,
+    weighted: bool,
+    dictionary: DataFrame | None,
+    broadcast_dict: bool,
+    max_idf_literal_entries: int | None,
+) -> tuple[_Vocab, Column | None]:
+    """(vocab, idf_arr) for a set join: the resolved vocabulary and, for
+    weighted joins, the global tid->idf literal when the vocabulary fits it
+    (chosen by VOCAB SIZE, not trust in the caller's flag: oversized
+    vocabularies never collect to the driver)."""
+    if weighted and dictionary is not None:
+        dictionary = persist_tracked(dictionary)  # probed, collected, joined
+    vocab = resolve_vocab(tokens_df, weighted, dictionary)
+    if vocab.inline is not None:
+        return vocab, vocab.inline.idf_arr if weighted else None
+    return vocab, _idf_literal(vocab, weighted, broadcast_dict,
+                               max_idf_literal_entries)
+
+
+def _group_sets(enc: DataFrame, keep: list[str]) -> DataFrame:
+    """Records with IDENTICAL token sets as one row: (tids, members, rid,
+    *keep). The group key is the min member id — deterministic and stable
+    across cache loss / recompute (a monotonically_increasing_id here
+    silently mis-joined the member expansion when a persisted partition was
+    re-derived; see ADVICE r2)."""
+    return persist_tracked(
+        enc.groupBy("tids").agg(F.collect_list("rid").alias("members"),
+                                F.min("rid").alias("rid"),
+                                *[F.first(c).alias(c) for c in keep]))
+
+
 def _self_join_parts(
     df: DataFrame,
     id_col: str,
@@ -630,66 +671,33 @@ def _self_join_parts(
     group_identical: bool = True,
     max_idf_literal_entries: int | None = None,
     ta_col: str | None = None,
+    singleton_groups: bool = True,
 ) -> tuple[DataFrame, DataFrame | None]:
     """The self join up to (but not including) member expansion: returns
-    (verified, groups) where ``verified`` holds the set-level pairs (record
-    pairs when ``group_identical=False``; ``groups`` is None then) — shared
-    by the public join and the fused top-K path, which consumes set-level
-    scores without ever materializing the expanded pair table."""
-    inline = None
-    if dictionary is None:
-        if max_token_freq is None:
-            # one-job vocabulary probe; falls through to the full
-            # dictionary build only when the vocab exceeds the inline cap
-            probe = (_inline_vocab_weighted if weighted
-                     else _inline_vocab_unweighted)
-            inline = probe(df.select(F.col(tokens_col).alias("tokens")))
-        if inline is None:
-            dictionary = build_dictionary(df.select(F.col(tokens_col).alias("tokens")))
-    if weighted and dictionary is not None:
-        dictionary = persist_tracked(dictionary)
-    # literal-vs-map verification path chosen by VOCAB SIZE, not trust in the
-    # caller's flag: oversized vocabularies never collect to the driver
-    if inline is None:
-        inline = _inline_vocab(dictionary)
-    if inline is not None:
-        idf_arr = inline.idf_arr if weighted else None
-    else:
-        idf_arr = _idf_literal(dictionary, weighted, broadcast_dict,
-                               max_idf_literal_entries)
+    (verified, groups) — shared by the public join, the fused top-K path and
+    set-level connected components, which consume set-level pairs without
+    ever materializing the expanded pair table.
+
+    On the all-pairs sweep ``verified`` holds SET-level pairs keyed by each
+    group's min member and ``groups`` is (rid, members, ...). On the prefix
+    path the join runs over records: ``verified`` holds record pairs and
+    ``groups`` is the singleton projection (rid, members=[rid]), no shuffle
+    — or None with ``singleton_groups=False``."""
+    vocab, idf_arr = _join_vocab(df.select(F.col(tokens_col).alias("tokens")),
+                                 weighted, dictionary, broadcast_dict,
+                                 max_idf_literal_entries)
+    inline = vocab.inline
     need_map = weighted and idf_arr is None
     n_mask = inline.n_words if inline is not None else None
     # the sweep decision is known before any record work: skip the weighted
-    # suffix-scan (and its array payload in the groups exchange) when the
-    # masks will verify every pair directly
+    # suffix-scan when the masks will verify every pair directly
     use_sweep = (group_identical and inline is not None
                  and (not weighted or ta_col is None)  # TA score needs len cols
-                 and inline.n_sets_approx is not None
-                 and inline.n_sets_approx <= MAX_ALLPAIRS_SETS)
-    enc = _prepare(df, id_col, tokens_col, dictionary, weighted, broadcast_dict,
+                 and vocab.n_sets_approx is not None
+                 and vocab.n_sets_approx <= MAX_ALLPAIRS_SETS)
+    enc = _prepare(df, id_col, tokens_col, vocab.dictionary, weighted, broadcast_dict,
                    need_idf_map=need_map, n_mask_words=n_mask, inline=inline,
                    need_suffixs=not use_sweep)
-    if group_identical:
-        keep = ["len"] + (["wt"] + (["suffixs"] if not use_sweep else [])
-                          if weighted else [])
-        keep += [f"__bm{w}" for w in range(n_mask or 0)]
-        if need_map:
-            keep.append("idf_map")
-        # deterministic group key: the min member id — stable across cache
-        # loss / recompute (a monotonically_increasing_id here silently
-        # mis-joined the member-expansion step if a persisted partition was
-        # re-derived; see ADVICE r2)
-        groups = (
-            enc.groupBy("tids")
-            .agg(F.collect_list("rid").alias("members"),
-                 F.min("rid").alias("rid"),
-                 *[F.first(c).alias(c) for c in keep])
-        )
-        groups = persist_tracked(groups)
-        work = groups
-    else:
-        groups = None
-        work = enc
     # All-pairs bitmask sweep for tiny-vocabulary, few-distinct-set corpora
     # (valve-gated, guide §1.2 "the distributed algorithm"): when the probed
     # vocabulary inlines AND the HLL distinct-set estimate says the full
@@ -699,9 +707,12 @@ def _self_join_parts(
     # them. A broadcast inequality join over the distinct-set table with the
     # SAME fused length filter + bitmask verify emits each set pair exactly
     # once with zero exchanges of entry rows (measured 0.9s vs 1.2-3.2s on
-    # the sf0.1 corpus, identical output). Real vocabularies (> 256 tokens)
-    # or set counts beyond the cap take the prefix path unchanged.
+    # the sf0.1 corpus, identical output). Only this path groups identical
+    # sets: the square is over DISTINCT sets. Real vocabularies (> 256
+    # tokens) or set counts beyond the cap take the prefix path.
     if use_sweep:
+        keep = ["len"] + (["wt"] if weighted else [])
+        groups = _group_sets(enc, keep + [f"__bm{w}" for w in range(n_mask)])
         f = _prefix_factor(sim, threshold)
         size1, size2 = ("w1", "w2") if weighted else ("len1", "len2")
         size_src = "wt" if weighted else "len"
@@ -734,7 +745,11 @@ def _self_join_parts(
         verified = j.select(F.col("rid1").alias("id1"),
                             F.col("rid2").alias("id2"), sim_col, *extra)
         return verified, groups
-    e = _entries(work, "1", sim, threshold, weighted, max_token_freq, dictionary,
+    # Prefix path: records join directly. Grouping identical sets lost here
+    # at every set:record ratio measured (4,788 sets over 7,573 pages, 243k
+    # over 250k at 100k entities): the two aggregate shuffles and the member
+    # expansion cost more than the duplicate rows they save.
+    e = _entries(enc, "1", sim, threshold, weighted, max_token_freq, vocab,
                  need_idf_map=need_map, n_mask_words=n_mask)
     # fan-out repartition: the probe-entry table is small relative to the
     # candidates the join EMITS (output explosion); without this, AQE
@@ -761,6 +776,8 @@ def _self_join_parts(
     verified = _fused_verify(joined, sim, threshold, weighted, sim_col,
                              canonicalize=True, idf_arr=idf_arr,
                              n_mask_words=n_mask, inline=inline, ta_col=ta_col)
+    groups = (enc.select("rid", F.array("rid").alias("members"))
+              if singleton_groups else None)
     return verified, groups
 
 
@@ -780,21 +797,21 @@ def set_similarity_self_join(
 ) -> DataFrame:
     """All pairs (id1 < id2) with sim(tokens) >= threshold. See module doc.
 
-    ``group_identical``: records with IDENTICAL token sets join as ONE
-    set-level row (the reference's group/cluster trick,
-    ``cpp/feature/feature_index.cc`` grouping) — the quadratic join runs
-    over distinct sets only, then pairs expand from the member lists:
-    cross-set pairs inherit the verified set-level sim, intra-set pairs are
-    sim = 1.0 by identity. On web corpora (boilerplate-heavy, duplicate
-    pages) this shrinks the join input massively and makes the final
-    dedup-shuffle unnecessary (set pairs are disjoint by construction)."""
+    ``group_identical``: allows the all-pairs sweep, where records with
+    IDENTICAL token sets join as ONE set-level row (the reference's
+    group/cluster trick, ``cpp/feature/feature_index.cc`` grouping) — the
+    broadcast square runs over distinct sets only, then pairs expand from
+    the member lists: cross-set pairs inherit the verified set-level sim,
+    intra-set pairs are sim = 1.0 by identity. The prefix path joins
+    records either way (same rows: identical sets verify to exactly 1.0);
+    ``False`` also keeps tiny vocabularies on the prefix path."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
     verified, groups = _self_join_parts(
         df, id_col, tokens_col, sim, threshold, weighted, dictionary,
         broadcast_dict, max_token_freq, sim_col, group_identical,
-        max_idf_literal_entries)
-    if not group_identical:
+        max_idf_literal_entries, singleton_groups=False)
+    if groups is None:
         return verified
     # expand set-level pairs back to record pairs; no dedup shuffle needed —
     # each unordered record pair descends from exactly one set(-pair)
@@ -836,26 +853,11 @@ def set_similarity_rs_join(
 
     Two asymmetric index-vs-probe joins cover both length orderings (ties
     treat the R side as smaller)."""
-    inline = None
-    if dictionary is None:
-        union = df_r.select(F.col(tokens_col).alias("tokens")).unionAll(
-            df_s.select(F.col(tokens_col).alias("tokens"))
-        )
-        if max_token_freq is None:
-            probe = (_inline_vocab_weighted if weighted
-                     else _inline_vocab_unweighted)
-            inline = probe(union)
-        if inline is None:
-            dictionary = build_dictionary(union)
-    if weighted and dictionary is not None:
-        dictionary = persist_tracked(dictionary)
-    if inline is None:
-        inline = _inline_vocab(dictionary)
-    if inline is not None:
-        idf_arr = inline.idf_arr if weighted else None
-    else:
-        idf_arr = _idf_literal(dictionary, weighted, broadcast_dict,
-                               max_idf_literal_entries)
+    union = df_r.select(F.col(tokens_col).alias("tokens")).unionAll(
+        df_s.select(F.col(tokens_col).alias("tokens")))
+    vocab, idf_arr = _join_vocab(union, weighted, dictionary, broadcast_dict,
+                                 max_idf_literal_entries)
+    inline, dictionary = vocab.inline, vocab.dictionary
     need_map = weighted and idf_arr is None
     n_mask = inline.n_words if inline is not None else None
     # RS flavor of the all-pairs sweep (same valve as the self join): group
@@ -864,8 +866,8 @@ def set_similarity_rs_join(
     # from the bitmasks, expand members after. Each (R-group, S-group) pair
     # is generated exactly once, so the two directional prefix joins AND
     # their dedup exchange disappear.
-    use_sweep = (inline is not None and inline.n_sets_approx is not None
-                 and inline.n_sets_approx <= MAX_ALLPAIRS_SETS)
+    use_sweep = (inline is not None and vocab.n_sets_approx is not None
+                 and vocab.n_sets_approx <= MAX_ALLPAIRS_SETS)
     left = _prepare(df_r, id_col, tokens_col, dictionary, weighted, broadcast_dict,
                     need_idf_map=need_map, n_mask_words=n_mask, inline=inline,
                     need_suffixs=not use_sweep)
@@ -877,15 +879,7 @@ def set_similarity_rs_join(
         size1, size2 = ("w1", "w2") if weighted else ("len1", "len2")
         size_src = "wt" if weighted else "len"
         keep = [size_src] + [f"__bm{w}" for w in range(n_mask)]
-
-        def grp(enc: DataFrame) -> DataFrame:
-            return persist_tracked(
-                enc.groupBy("tids").agg(
-                    F.collect_list("rid").alias("members"),
-                    F.min("rid").alias("rid"),
-                    *[F.first(c).alias(c) for c in keep]))
-
-        gl, gr = grp(left), grp(right)
+        gl, gr = _group_sets(left, keep), _group_sets(right, keep)
         a = gl.select(F.col("rid").alias("rid1"), F.col(size_src).alias(size1),
                       *[F.col(f"__bm{w}").alias(f"__bm{w}1") for w in range(n_mask)])
         par = df_r.sparkSession.sparkContext.defaultParallelism
@@ -908,9 +902,9 @@ def set_similarity_rs_join(
             .withColumn("a", F.explode("mm1")).withColumn("b", F.explode("mm2"))
             .select(F.col("a").alias("id1"), F.col("b").alias("id2"), sim_col)
         )
-    l = _entries(left, "1", sim, threshold, weighted, max_token_freq, dictionary,
+    l = _entries(left, "1", sim, threshold, weighted, max_token_freq, vocab,
                  need_idf_map=need_map, n_mask_words=n_mask)
-    r = _entries(right, "2", sim, threshold, weighted, max_token_freq, dictionary,
+    r = _entries(right, "2", sim, threshold, weighted, max_token_freq, vocab,
                  need_idf_map=need_map, n_mask_words=n_mask)
     m1, m2 = ("w1", "w2") if weighted else ("len1", "len2")
     # fan-out repartition: see the self join — the probe side must be wide

@@ -88,9 +88,10 @@ def topk_via_ta(
     # from (bit_count overlap, |a|, |b|) — the same double arithmetic as
     # ta_score, with no per-group-pair string-array intersection. Large
     # vocabularies keep the string path. One probe job total.
-    from .set_join import _inline_vocab_unweighted
+    from .set_join import resolve_vocab
 
-    inline = _inline_vocab_unweighted(t.select(F.col("__toks").alias("tokens")))
+    inline = resolve_vocab(t.select(F.col("__toks").alias("tokens")),
+                           build=False).inline
     if inline is not None:
         nw = inline.n_words
         tids = F.array_sort(
@@ -180,7 +181,9 @@ def topk_over_self_join(
     division/sqrt are exact for these operands). Group-level threshold
     pruning keeps every group pair at or above the k-th best group score —
     each group pair contributes >= 1 record pair, so the record-level top-k
-    survives — and only those expand into the final TakeOrderedAndProject."""
+    survives — and only those expand into the final TakeOrderedAndProject.
+    On the prefix path the join runs over records, so every group is a
+    singleton (a projection, no shuffle) and the same code applies."""
     from .cache import persist_tracked
     from .set_join import _self_join_parts
 
