@@ -91,24 +91,6 @@ def weighted_overlap(a: Column, b: Column, idf_arr: Column) -> Column:
     return _idf_sum(F.array_intersect(a, b), idf_arr)
 
 
-def weighted_jaccard(a: Column, b: Column, idf_arr: Column, wa: Column, wb: Column) -> Column:
-    wo = weighted_overlap(a, b, idf_arr)
-    denom = wa + wb - wo
-    return F.when(denom > 0, wo / denom).otherwise(F.lit(0.0))
-
-
-def weighted_cosine(a: Column, b: Column, idf_arr: Column, wa: Column, wb: Column) -> Column:
-    wo = weighted_overlap(a, b, idf_arr)
-    denom = F.sqrt(wa * wb)
-    return F.when(denom > 0, wo / denom).otherwise(F.lit(0.0))
-
-
-def weighted_dice(a: Column, b: Column, idf_arr: Column, wa: Column, wb: Column) -> Column:
-    wo = weighted_overlap(a, b, idf_arr)
-    denom = wa + wb
-    return F.when(denom > 0, F.lit(2.0) * wo / denom).otherwise(F.lit(0.0))
-
-
 def weighted_overlap_coeff(a: Column, b: Column, idf_arr: Column, wa: Column, wb: Column) -> Column:
     """W∩ / min(wa, wb); 1.0 when both record weights are ~0 (simfunc.cc:265-283)."""
     wo = weighted_overlap(a, b, idf_arr)

@@ -76,13 +76,6 @@ def _rule_passes(rule: Rule, value: Column) -> Column:
     return value <= rule.threshold
 
 
-def rule_value_columns(rules: list[Rule]) -> list[tuple[str, Column]]:
-    return [
-        (f"rule_{i}", _rule_value(r, F.col(f"l_{r.attr}"), F.col(f"r_{r.attr}")))
-        for i, r in enumerate(rules)
-    ]
-
-
 def estimate_rule_density(
     labeled_pairs: DataFrame,
     records: DataFrame,

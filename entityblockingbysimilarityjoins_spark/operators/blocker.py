@@ -26,15 +26,10 @@ from pyspark.sql import functions as F
 from ..functions.dictionary import build_dictionary
 from ..functions.tokenize import tokenizer
 from ..sources.rules import Rule
-from .edit_join import edit_distance_rs_join, edit_distance_self_join
-from .exact_join import (
-    absolute_norm_rs_join,
-    absolute_norm_self_join,
-    exact_rs_join,
-    exact_self_join,
-)
-from .overlap_join import overlap_rs_join, overlap_self_join
-from .set_join import set_similarity_rs_join, set_similarity_self_join
+from .edit_join import edit_distance_self_join
+from .exact_join import absolute_norm_self_join, exact_self_join
+from .overlap_join import overlap_self_join
+from .set_join import set_similarity_self_join
 from .topk import cap_pairs
 from .cache import persist_tracked
 
@@ -98,32 +93,6 @@ def _run_rule_self(df: DataFrame, id_col: str, rule: Rule, cache: _TokenCache,
     raise ValueError(f"unsupported rule sim {rule.sim!r}")
 
 
-def _run_rule_rs(df_r: DataFrame, df_s: DataFrame, id_col: str, rule: Rule,
-                 cache_r: _TokenCache, cache_s: _TokenCache, weighted: bool) -> DataFrame:
-    if rule.sim in ("jac", "cos", "dice", "overlap"):
-        tr = cache_r.tokens(df_r, id_col, rule)
-        ts = cache_s.tokens(df_s, id_col, rule)
-        if rule.sim == "overlap":
-            union = tr.select("tokens").unionAll(ts.select("tokens"))
-            d = cache_r.dictionary(union, rule)
-            return overlap_rs_join(tr, ts, id_col, "tokens",
-                                   c=max(int(rule.threshold), 1), dictionary=d).select("id1", "id2")
-        # dictionary=None: one-job probe over R ∪ S (see _run_rule_self)
-        return set_similarity_rs_join(
-            tr, ts, id_col, "tokens", sim=rule.sim, threshold=rule.threshold,
-            weighted=weighted,
-        ).select("id1", "id2")
-    if rule.sim == "lev":
-        return edit_distance_rs_join(df_r, df_s, id_col, rule.attr,
-                                     d=max(int(rule.threshold), 0)).select("id1", "id2")
-    if rule.sim == "exm":
-        return exact_rs_join(df_r, df_s, id_col, rule.attr)
-    if rule.sim == "anm":
-        return absolute_norm_rs_join(df_r, df_s, id_col, rule.attr,
-                                     threshold=rule.threshold).select("id1", "id2")
-    raise ValueError(f"unsupported rule sim {rule.sim!r}")
-
-
 def _prune_degenerate_lev(rules: list[Rule]) -> list[Rule]:
     """lev threshold <= 0 == exact join; skip if an exm rule on the attr exists."""
     exm_attrs = {r.attr for r in rules if r.sim == "exm"}
@@ -171,24 +140,6 @@ def block_self(
         allpairs.groupBy("id1", "id2")
         .agg(F.count("*").cast("int").alias("rules_passed"))
     )
-
-
-def block_rs(
-    df_r: DataFrame,
-    df_s: DataFrame,
-    id_col: str,
-    rules: list[Rule],
-    weighted: bool = False,
-) -> DataFrame:
-    rules = _prune_degenerate_lev(rules)
-    if not rules:
-        raise ValueError("no blocking rules")
-    cache_r, cache_s = _TokenCache(), _TokenCache()
-    per_rule = [_run_rule_rs(df_r, df_s, id_col, r, cache_r, cache_s, weighted) for r in rules]
-    allpairs = per_rule[0]
-    for p in per_rule[1:]:
-        allpairs = allpairs.unionByName(p)
-    return allpairs.groupBy("id1", "id2").agg(F.count("*").cast("int").alias("rules_passed"))
 
 
 def per_rule_recall(

@@ -162,7 +162,7 @@ def cluster_pairs(matches: DataFrame, src: str = "id1", dst: str = "id2") -> Dat
 
 
 def connected_components_over_groups(
-    set_pairs: DataFrame, groups: DataFrame
+    set_pairs: DataFrame, groups: DataFrame | None
 ) -> DataFrame:
     """(node, component) for the record graph a group-identical set join
     implies — computed on the SET-level graph, never expanding record pairs.
@@ -175,8 +175,11 @@ def connected_components_over_groups(
     expansion the old composition collected), multi-member groups that
     touched no set pair become their own components, and members inherit
     their group's label through one small join + explode (guide §8: decide
-    with small rows, move the heavy expansion never)."""
+    with small rows, move the heavy expansion never). ``groups=None`` (the
+    join ran over records) means the set pairs already are record pairs."""
     comp_sets = connected_components(set_pairs)
+    if groups is None:
+        return comp_sets
     multi = groups.filter(F.size("members") >= 2).select(F.col("rid").alias("node"))
     iso = (
         multi.join(comp_sets.select("node"), "node", "left_anti")

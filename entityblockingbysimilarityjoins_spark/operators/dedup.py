@@ -7,18 +7,17 @@ the dedup primitives a 100 TB corpus pipeline needs, each Spark-native:
   record id (deterministic representative).
 - ``minhash_lsh_pairs``: shingle -> xxhash64 (JVM) -> minhash signatures
   (min over (a*h+b) mod p per permutation, p = 2^31-1 so the modular
-  arithmetic stays inside signed-64 bounds). Default impl is Arrow-batched
-  numpy with ``np.minimum.reduceat`` over the batch-flattened hash array —
-  one vectorized pass per permutation, zero per-row Python; a pure
-  Column-expression impl exists as fallback. Then banded bucket join ->
-  exact Jaccard verification with array_intersect. With b bands of r rows the candidate
+  arithmetic stays inside signed-64 bounds), Arrow-batched numpy with
+  ``np.minimum.reduceat`` over the batch-flattened hash array — one
+  vectorized pass per permutation, zero per-row Python. Then banded bucket
+  join -> exact Jaccard verification. With b bands of r rows the candidate
   recall at Jaccard s is 1-(1-s^r)^b; defaults (b=32, r=8) give per-pair
   miss probability <2e-8 at s>=0.9 while colliding far fewer mid-similarity
   pairs than shallow bands — verification then makes the *output* exact w.h.p.
   **r is the scale knob**: on corpora dense in MID-similarity pairs (entity
   variants at jac 0.6-0.85) r=8 floods the candidate-dedup shuffle (~73
   band candidates per true pair measured on a variant-heavy 1.25M-page
-  corpus — scripts/minhash_stage_probe.py); r=12 (e.g. 192/16) cuts the
+  corpus); r=12 (e.g. 192/16) cuts the
   mid-sim collision rate ~3x and costs only ~0.5% banding recall at s=0.9.
   Keep r=8 when the exact-recall contract matters more than the shuffle.
 - ``simhash_pairs``: 60-bit simhash over md5-derived token hashes, computed
@@ -45,7 +44,17 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokens_qgram, tokens_wspace
 from .cache import persist_tracked
-from .set_join import set_similarity_self_join
+from .set_join import (
+    _bm_cols,
+    _expand_pairs,
+    _fan_out,
+    _group_sets,
+    _mask_cols,
+    _mask_overlap,
+    _size_filter,
+    resolve_vocab,
+    set_similarity_self_join,
+)
 
 log = logging.getLogger(__name__)
 
@@ -85,37 +94,15 @@ def _minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def minhash_signature(tokens_hashed: Column, num_perm: int = 128, seed: int = 1,
-                      impl: str = "numpy") -> Column:
+def minhash_signature(tokens_hashed: Column, num_perm: int = 128, seed: int = 1) -> Column:
     """array<long> minhash signature from an array<long> of token hashes;
     sig[i] = min over tokens of (a_i * (h mod p) + b_i) mod p, p = 2^31-1.
 
-    impl='numpy' (default): Arrow-batched and fully vectorized — the whole
-    batch's token hashes are flattened into ONE array, each permutation is a
-    single numpy affine pass, and the per-row minima come from
-    ``np.minimum.reduceat`` on the row offsets. No per-row Python loop.
-
-    impl='native': pure Column expression (nested transform + array_min) —
-    engine-independent but interpreted per element (Spark HOF lambdas do not
-    reach codegen), ~8x slower; kept for environments without Arrow.
-    Both produce identical signatures. Empty arrays map to the sentinel p."""
+    Arrow-batched and fully vectorized — the whole batch's token hashes are
+    flattened into ONE array, each permutation is a single numpy affine
+    pass, and the per-row minima come from ``np.minimum.reduceat`` on the
+    row offsets. No per-row Python loop. Empty arrays map to the sentinel p."""
     a, b = _minhash_params(num_perm, seed)
-    if impl == "native":
-        A = F.lit([int(x) for x in a])
-        B = F.lit([int(x) for x in b])
-        p = F.lit(_MERSENNE31)
-        hmod = F.transform(tokens_hashed, lambda h: F.pmod(h, p))
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(num_perm - 1)),
-            lambda i: F.coalesce(
-                F.array_min(
-                    F.transform(hmod, lambda h: F.pmod(F.get(A, i) * h + F.get(B, i), p))
-                ),
-                F.lit(_MERSENNE31),
-            ),
-        )
-    if impl != "numpy":
-        raise ValueError(impl)
     from pyspark.sql.functions import pandas_udf
 
     def _sig(hashes):
@@ -148,9 +135,8 @@ def cap_band_buckets(
     cap: int | None,
     label: str = "lsh",
 ) -> DataFrame:
-    """Overflow valve for LSH band buckets (the band-join analogue of the set
-    joins' ``max_token_freq``, mirroring the reference's hard inverted-list
-    caps ``cpp/common/config.h:109-110``).
+    """Overflow valve for LSH band buckets, mirroring the reference's hard
+    inverted-list caps (``cpp/common/config.h:109-110``).
 
     Banding math bounds EXPECTED bucket sizes, but a pathological bucket
     (boilerplate corpora, adversarial near-identical shards) still emits
@@ -196,72 +182,51 @@ def minhash_lsh_pairs(
     bands: int = 32,
     seed: int = 1,
     sim_col: str = "jac",
-    group_identical: bool = True,
     max_band_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs (id1 < id2) with verified exact Jaccard >= threshold.
 
-    ``group_identical`` (default on): identical token sets join as ONE
-    set-level row — the right default on duplicate-heavy web corpora; turn
-    off on corpora with few exact duplicates to skip the extra groupBy.
+    Identical token sets join as ONE set-level row (exact duplicates are
+    abundant in web corpora): signatures are computed once per DISTINCT
+    set, the banded join runs over distinct sets, intra-set pairs are
+    jaccard 1.0 by identity, cross pairs expand from the member lists.
     ``max_band_bucket``: optional overflow valve — see ``cap_band_buckets``."""
     if num_perm % bands != 0:
         raise ValueError("bands must divide num_perm")
     r = num_perm // bands
-    # identical token sets join as one set-level row (exact duplicates are
-    # abundant in web corpora): signatures are computed once per DISTINCT
-    # set, the banded join runs over distinct sets, intra-set pairs are
-    # jaccard 1.0 by identity, cross pairs expand from the member lists
     slim = (
         df.select(F.col(id_col).alias("rid"), F.col(tokens_col).alias("toks"))
         .filter(F.size("toks") > 0)
     )
-    if group_identical:
-        grouped = slim.groupBy("toks").agg(
-            # deterministic group key (min member id) — stable across cache
-            # loss, unlike a monotonically_increasing_id surrogate (ADVICE r2)
-            F.collect_list("rid").alias("members"), F.min("rid").alias("gid"))
-    else:
-        grouped = slim.select(F.col("toks"), F.array("rid").alias("members"),
-                              F.col("rid").alias("gid"))
     # Cache layout (12.5M-page lesson, round 5): persist the two frames that
-    # are actually read twice — ``grouped`` (toks/members, read by verify's
-    # two joins + the intra expansion) and the post-explode band table
-    # (4 narrow int columns, read by both sides of the band self-join and by
-    # the overflow-valve stats) — and let the signature column STREAM through
+    # are actually read twice — the groups (toks/members, read by verify's
+    # joins + the member expansion) and the post-explode band table (narrow
+    # int columns, read by both sides of the band self-join and by the
+    # overflow-valve stats) — and let the signature column STREAM through
     # unpersisted: it is consumed exactly once by the band explode. Caching
     # the signature+tokenhash base instead (~3 KB/row: toks + a parallel
     # xxhash64 array + 192 longs) saturated 6g-executor storage pools at
     # 12.5M distinct sets and execution OOM'd against block eviction
     # (exit 52) — and stored ~4x more bytes than these two frames combined.
+    groups = _group_sets(slim, "toks")
     # Tiny-vocab verify (see set_join): LSH collides far more candidate set
     # pairs than survive exact verification on mid-similarity-dense corpora,
-    # so when the probed vocabulary inlines, each distinct set also carries
-    # bitmask words and the exact-Jaccard verify is bit_count arithmetic
-    # instead of a string-array intersection per candidate.
-    from .set_join import _mask_cols, _mask_overlap, resolve_vocab
-
+    # so when the probed vocabulary inlines, each distinct set's band rows
+    # also carry bitmask words and the exact-Jaccard verify is bit_count
+    # arithmetic instead of a string-array intersection per candidate.
     inline = resolve_vocab(slim.select(F.col("toks").alias("tokens")),
                            build=False).inline
-    if inline is not None:
-        tids = F.array_sort(
-            F.filter(F.transform("toks",
-                                 lambda x: F.element_at(inline.token_map, x)),
-                     lambda x: x.isNotNull())).cast("array<int>")
-        grouped = grouped.withColumn("__tids", tids)
-        grouped = grouped.select(
-            *[c for c in grouped.columns if c != "__tids"],
-            *_mask_cols(F.col("__tids"), inline.n_words))
-    grouped = persist_tracked(grouped)
+    nw = inline.n_words if inline is not None else 0
+    mask_pay = [f"__bm{w}" for w in range(nw)]
+    # the masks are projected BEFORE the band explode: once per set, not
+    # once per band row
     base = (
-        grouped
+        groups.select("rid", "toks", *(_mask_cols(inline.encode("toks"), nw) if nw else []))
         .withColumn("__h", F.transform("toks", lambda t: F.xxhash64(t)))
         .withColumn("__sig", minhash_signature(F.col("__h"), num_perm, seed))
     )
-    nw = inline.n_words if inline is not None else 0
-    mask_pay = [f"__bm{w}" for w in range(nw)]
     bands_df = base.select(
-        "gid",
+        "rid",
         F.size("toks").alias("len"),
         *mask_pay,
         F.posexplode(
@@ -274,19 +239,13 @@ def minhash_lsh_pairs(
     bands_df = persist_tracked(bands_df)
     bands_df = cap_band_buckets(bands_df, ("band", "bh"), max_band_bucket,
                                 "minhash_lsh_pairs")
-    # fan-out repartition (see set_join): band buckets emit far more
-    # candidate rows than they hold — keep the probe side wide
-    par = df.sparkSession.sparkContext.defaultParallelism
-    l = bands_df.withColumnsRenamed(
-        {"gid": "gid1", "len": "len1", **{m: f"{m}1" for m in mask_pay}}
-    ).repartition(2 * par)
-    rr = bands_df.withColumnsRenamed(
-        {"gid": "gid2", "len": "len2", **{m: f"{m}2" for m in mask_pay}})
+    l, rr = (bands_df.select("band", "bh", F.col("rid").alias(f"rid{i}"),
+                             F.col("len").alias(f"len{i}"), *_bm_cols(nw, i))
+             for i in ("1", "2"))
     coll = (
-        l.join(rr, ["band", "bh"])
-        .filter(F.col("gid1") < F.col("gid2"))
-        .filter(F.least("len1", "len2")
-                >= F.ceil(F.lit(threshold) * F.greatest("len1", "len2") - F.lit(1e-9)))
+        _fan_out(l).join(rr, ["band", "bh"])
+        .filter(F.col("rid1") < F.col("rid2"))
+        .filter(_size_filter("jac", threshold, False))
     )
     if inline is not None:
         # fused bitset verify inside the band-join stage (the mask words are
@@ -294,43 +253,28 @@ def minhash_lsh_pairs(
         # free of array payloads): only exact-Jaccard SURVIVORS reach the
         # dedup exchange, instead of every band collision. On mid-similarity-
         # dense corpora collisions outnumber survivors ~50x.
-        o = _mask_overlap("1", "2", nw)
         verified = (
-            coll.withColumn("__o", o)
+            coll.withColumn("__o", _mask_overlap("1", "2", nw))
             .withColumn(sim_col, F.col("__o")
                         / (F.col("len1") + F.col("len2") - F.col("__o")))
             .filter(F.col(sim_col) >= threshold)
-            .select("gid1", "gid2", sim_col)
-            .dropDuplicates(["gid1", "gid2"])
-            .join(grouped.select(F.col("gid").alias("gid1"),
-                                 F.col("members").alias("m1")), "gid1")
-            .join(grouped.select(F.col("gid").alias("gid2"),
-                                 F.col("members").alias("m2")), "gid2")
+            .select("rid1", "rid2", sim_col)
+            .dropDuplicates(["rid1", "rid2"])
         )
     else:
-        cand = coll.select("gid1", "gid2").dropDuplicates(["gid1", "gid2"])
+        # the token arrays come with the member lists, in one join per side
+        cand = coll.select("rid1", "rid2").dropDuplicates(["rid1", "rid2"])
+        t1, t2 = (groups.select(F.col("rid").alias(f"rid{i}"), F.col("toks").alias(f"t{i}"),
+                                F.col("members").alias(f"m{i}")) for i in ("1", "2"))
         verified = (
-            cand.join(grouped.select(F.col("gid").alias("gid1"), F.col("toks").alias("t1"),
-                                     F.col("members").alias("m1")), "gid1")
-            .join(grouped.select(F.col("gid").alias("gid2"), F.col("toks").alias("t2"),
-                                 F.col("members").alias("m2")), "gid2")
+            cand.join(t1, "rid1").join(t2, "rid2")
             .withColumn("__o", F.size(F.array_intersect("t1", "t2")))
             .withColumn(sim_col, F.col("__o") / (F.size("t1") + F.size("t2") - F.col("__o")))
             .filter(F.col(sim_col) >= threshold)
+            .select("rid1", "rid2", sim_col, "m1", "m2")
         )
-    cross = (
-        verified.withColumn("a", F.explode("m1")).withColumn("b", F.explode("m2"))
-        .select(F.least("a", "b").alias("id1"), F.greatest("a", "b").alias("id2"), sim_col)
-    )
-    intra = (
-        grouped.filter(F.size("members") >= 2)
-        .select(F.explode("members").alias("a"), "members")
-        .select("a", F.explode("members").alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .select(F.col("a").alias("id1"), F.col("b").alias("id2"),
-                F.lit(1.0).alias(sim_col))
-    )
-    return cross.unionByName(intra)
+    set_pairs = verified.withColumnsRenamed({"rid1": "id1", "rid2": "id2"})
+    return _expand_pairs(set_pairs, groups, sim_col, 1.0)
 
 
 # ---------------------------------------------------------------------------

@@ -105,18 +105,3 @@ def sample_video_frames(df: DataFrame, n_frames: int = 4, fake: bool = True,
             yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame_phash"])
 
     return df.mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)
-
-
-def resize_images(df: DataFrame, target: int = 224, fake: bool = True,
-                  payload_col: str = "payload") -> DataFrame:
-    """Resize stub: passes payload through with updated meta (shape check only)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError("real resize requires PIL — not in this container")
-            out = pdf[["media_id", "kind", payload_col]].copy()
-            out["meta"] = [{"resized_to": str(target)}] * len(pdf)
-            yield out
-
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)

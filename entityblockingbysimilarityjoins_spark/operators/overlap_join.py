@@ -22,7 +22,14 @@ from pyspark.sql import functions as F
 
 from ..functions.dictionary import encode_tokens
 from .cache import persist_tracked
-from .set_join import _InlineVocab, _mask_cols, _mask_overlap, resolve_vocab
+from .set_join import (
+    _bm_cols,
+    _fan_out,
+    _InlineVocab,
+    _mask_cols,
+    _mask_overlap,
+    resolve_vocab,
+)
 
 
 def _vocab_and_singletons(df_tokens: DataFrame | None, dictionary: DataFrame | None):
@@ -42,14 +49,7 @@ def _prep(df: DataFrame, id_col: str, tokens_col: str, c: int, dictionary: DataF
           broadcast_dict: bool, inline: _InlineVocab | None = None) -> DataFrame:
     slim = df.select(F.col(id_col).alias("rid"), F.col(tokens_col).alias("toks"))
     if inline is not None:
-        # tiny-vocab path (see set_join): literal-map encode, zero exchanges
-        tids = F.array_sort(
-            F.filter(
-                F.transform("toks", lambda t: F.element_at(inline.token_map, t)),
-                lambda x: x.isNotNull(),
-            )
-        ).cast("array<int>")
-        enc = slim.select("rid", tids.alias("tids"))
+        enc = slim.select("rid", inline.encode("toks").alias("tids"))
     else:
         enc = encode_tokens(slim, dictionary, id_col="rid", tokens_col="toks",
                             weight_col=None, broadcast_dict=broadcast_dict,
@@ -64,11 +64,9 @@ def _prep(df: DataFrame, id_col: str, tokens_col: str, c: int, dictionary: DataF
 
 def _prefix(enc: DataFrame, c: int, side: str, singletons,
             n_mask_words: int | None = None) -> DataFrame:
-    payload = ([F.col(f"__bm{w}").alias(f"__bm{w}{side}")
-                for w in range(n_mask_words)] if n_mask_words else [])
     e = enc.select(
         F.col("rid").alias(f"rid{side}"),
-        *payload,
+        *_bm_cols(n_mask_words, side),
         F.explode(F.slice("tids", 1, F.col("len") - F.lit(c - 1))).alias("tok"),
     )
     if isinstance(singletons, list):
@@ -98,10 +96,7 @@ def overlap_self_join(
     n_mask = inline.n_words if inline is not None else None
     enc = _prep(df, id_col, tokens_col, c, dictionary, broadcast_dict,
                 inline=inline).transform(persist_tracked)
-    # fan-out repartition (see set_join): prefix entries are tiny relative
-    # to the candidate pairs the join emits
-    par = df.sparkSession.sparkContext.defaultParallelism
-    l = _prefix(enc, c, "1", singletons, n_mask).repartition(2 * par)
+    l = _fan_out(_prefix(enc, c, "1", singletons, n_mask))
     r = _prefix(enc, c, "2", singletons, n_mask)
     joined = l.join(r, (l["tok"] == r["tok"]) & (F.col("rid1") < F.col("rid2")))
     if n_mask:

@@ -35,12 +35,14 @@ grouped only on the all-pairs sweep (tiny vocabulary, few distinct sets),
 whose broadcast square runs over DISTINCT sets; on the prefix path grouping
 lost at every set:record ratio measured.
 
+The set-level core lives here too, shared by the top-K and dedup operators:
+``_InlineVocab.encode`` (tiny-vocabulary encode), ``_group_sets`` (group
+identical sets), ``_expand_pairs`` (members back to record pairs) and
+``_ta_score`` (the 4-sim top-K score).
+
 Scale levers (north_rule: "salted, skew-aware inverted-index self-join"):
 - prefixes hold only the rarest tokens (deterministic freq-ordered ids);
 - AQE skew-join splits oversized token groups at shuffle time;
-- ``max_token_freq`` optionally drops ultra-hot tokens from candidate
-  generation (LIMIT_INV_SIZE/MAX_INV_SIZE valve, config.h:109-110) —
-  logged, recall caveat, off by default;
 - join strategy left to Catalyst/AQE: small prefix-entry tables broadcast
   (map-side join, zero shuffle); large ones sort-merge with AQE's skew
   split handling hot prefix tokens.
@@ -158,6 +160,16 @@ class _InlineVocab:
         self.tid_by_token = {r["token"]: int(r["tid"]) for r in rows}
         self.freqs: dict | None = None  # token -> freq, set by resolve_vocab
 
+    def encode(self, toks: str | Column) -> Column:
+        """The sorted tid array of a token-array column — a pure projection
+        (map lookup + sort), zero exchanges where the dictionary path needs
+        explode + join + groupBy. Unknown tokens map to NULL and are
+        dropped, matching the inner dictionary join; ascending tids are
+        rarest-first."""
+        return F.array_sort(F.filter(
+            F.transform(toks, lambda t: F.element_at(self.token_map, t)),
+            lambda x: x.isNotNull())).cast("array<int>")
+
     def wo_lut(self, w: int, j: int) -> list[float]:
         """256-entry lookup table: byte j of mask word w -> sum of the IDFs
         of its set bits (added in ascending-tid order, float64)."""
@@ -220,18 +232,6 @@ class _Vocab:
         self.n_records = n_records
         self.n_sets_approx = n_sets_approx
         self.n_tokens = inline.n if inline is not None else n_tokens
-
-    def drop_hot(self, entries: DataFrame, max_token_freq: int) -> DataFrame:
-        """Prefix entries without the tokens whose corpus frequency exceeds
-        ``max_token_freq`` (the ``tok`` column holds tids)."""
-        if self.dictionary is not None:
-            hot = self.dictionary.filter(F.col("freq") > max_token_freq).select(
-                F.col("tid").alias("tok"))
-            return entries.join(F.broadcast(hot), "tok", "left_anti")
-        inline = self.inline
-        hot = [inline.tid_by_token[t] for t, f in inline.freqs.items()
-               if f > max_token_freq]
-        return entries.filter(~F.col("tok").isin(hot)) if hot else entries
 
 
 def resolve_vocab(
@@ -321,18 +321,36 @@ def _mask_overlap(side1: str, side2: str, n_words: int) -> Column:
     return o
 
 
-def _idf_literal(
-    vocab: _Vocab,
-    weighted: bool,
-    broadcast_dict: bool,
-    max_entries: int | None = None,
-) -> Column | None:
+def _bm_cols(n_words: int | None, side: str) -> list[Column]:
+    """The mask words renamed for one side of a pair: __bm{w} -> __bm{w}{side}."""
+    return [F.col(f"__bm{w}").alias(f"__bm{w}{side}") for w in range(n_words or 0)]
+
+
+def _overlap(n_mask_words: int | None) -> Column:
+    """|A ∩ B| of a pair row: bit_count over the mask words when the
+    vocabulary inlined, array_intersect over the tid arrays otherwise."""
+    if n_mask_words:
+        return _mask_overlap("1", "2", n_mask_words)
+    return F.size(F.array_intersect(F.col("t1"), F.col("t2")))
+
+
+def _fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin a join's probe side over twice the default parallelism:
+    the side is small relative to the candidates the join EMITS (output
+    explosion), and without this AQE right-sizes partitions to the tiny
+    input, so the whole verify stage runs in a couple of tasks however many
+    cores exist."""
+    return df.repartition(2 * df.sparkSession.sparkContext.defaultParallelism)
+
+
+def _idf_literal(vocab: _Vocab, weighted: bool, broadcast_dict: bool) -> Column | None:
     """Global tid->idf lookup as an array literal (tids are dense 0..V-1),
-    or None when the vocabulary exceeds the inline cap. The size comes from
-    ``resolve_vocab``; only a caller-supplied dictionary is LIMIT-probed."""
+    or None when the vocabulary exceeds MAX_IDF_LITERAL_ENTRIES. The size
+    comes from ``resolve_vocab``; only a caller-supplied dictionary is
+    LIMIT-probed."""
     if not (weighted and broadcast_dict):
         return None
-    cap = max_entries if max_entries is not None else MAX_IDF_LITERAL_ENTRIES
+    cap = MAX_IDF_LITERAL_ENTRIES
     n = vocab.n_tokens
     if n is None:
         n = vocab.dictionary.limit(cap + 1).count()
@@ -355,11 +373,11 @@ def _prepare(
     weighted: bool,
     broadcast_dict: bool,
     need_idf_map: bool = False,
-    n_mask_words: int | None = None,
     inline: _InlineVocab | None = None,
     need_suffixs: bool = True,
 ) -> DataFrame:
-    """(rid, tids, len[, wt, tw, suffixs]) with empties dropped (DROP_EMPTY).
+    """(rid, tids, len[, __bm*, wt, idf_map, suffixs]) with empties dropped
+    (DROP_EMPTY); an inline vocabulary also adds the bitmask words.
 
     ``need_suffixs=False`` skips the reverse prefix-sum scan (and keeps the
     arrays out of every downstream exchange) when the caller knows no
@@ -385,18 +403,10 @@ def _prepare(
       (aggregate HOF), feeding the weight-based prefix membership tests."""
     slim = df.select(F.col(id_col).alias("rid"), F.col(tokens_col).alias("toks"))
     if inline is not None:
-        # inline-encode: map lookup + sort is a pure projection — zero
-        # exchanges where the join path needed explode + join + groupBy.
-        # Unknown tokens map to NULL and are filtered, matching the inner
-        # dictionary join; sorted ascending tids == rarest-first as before.
-        tids = F.array_sort(
-            F.filter(
-                F.transform("toks", lambda t: F.element_at(inline.token_map, t)),
-                lambda x: x.isNotNull(),
-            )
-        ).cast("array<int>")
-        enc = slim.select("rid", tids.alias("tids"))
+        enc = slim.select("rid", inline.encode("toks").alias("tids"))
         enc = enc.filter(F.size("tids") > 0).withColumn("len", F.size("tids"))
+        enc = enc.withColumns(
+            {f"__bm{w}": c for w, c in enumerate(_mask_cols(F.col("tids"), inline.n_words))})
         if weighted:
             idf_arr = inline.idf_arr
             enc = enc.withColumn(
@@ -412,9 +422,6 @@ def _prepare(
             idfs_col="idfs" if weighted else None, drop_empty=True,
         ).drop("toks")
         enc = enc.withColumn("len", F.size("tids"))
-    if n_mask_words:
-        enc = enc.withColumns(
-            {f"__bm{w}": c for w, c in enumerate(_mask_cols(F.col("tids"), n_mask_words))})
     if weighted:
         if need_idf_map:
             enc = enc.withColumn("idf_map", F.map_from_arrays("tids", "idfs"))
@@ -444,8 +451,6 @@ def _entries(
     sim: str,
     threshold: float,
     weighted: bool,
-    max_token_freq: int | None,
-    vocab: _Vocab,
     need_idf_map: bool = False,
     n_mask_words: int | None = None,
 ) -> DataFrame:
@@ -461,15 +466,12 @@ def _entries(
     for the weighted positional filter."""
     f = _prefix_factor(sim, threshold)
     fs = _short_prefix_factor(sim, threshold)
+    # bitset mode: entries carry the fixed-width mask words instead of the
+    # whole int array — a narrower exploded table and O(words) verify
+    payload = _bm_cols(n_mask_words, side) or [F.col("tids").alias(f"t{side}")]
     if not weighted:
         plen = (F.col("len") - F.ceil(F.lit(f) * F.col("len") - F.lit(_EPS)) + 1).cast("int")
         slen = (F.col("len") - F.ceil(F.lit(fs) * F.col("len") - F.lit(_EPS)) + 1).cast("int")
-        # bitset mode: entries carry the fixed-width mask words instead of the
-        # whole int array — a narrower exploded table and O(words) verify
-        payload = (
-            [F.col(f"__bm{w}").alias(f"__bm{w}{side}") for w in range(n_mask_words)]
-            if n_mask_words else [F.col("tids").alias(f"t{side}")]
-        )
         cols = [
             F.col("rid").alias(f"rid{side}"),
             *payload,
@@ -482,10 +484,6 @@ def _entries(
     else:
         # suffix weights ride the pre-computed per-record scan (suffixs) —
         # one posexplode, zero joins, zero windows
-        payload = (
-            [F.col(f"__bm{w}").alias(f"__bm{w}{side}") for w in range(n_mask_words)]
-            if n_mask_words else [F.col("tids").alias(f"t{side}")]
-        )
         cols = [
             F.col("rid").alias(f"rid{side}"),
             *payload,
@@ -504,91 +502,74 @@ def _entries(
             f"short{side}",
             F.col(f"suffix{side}") >= F.lit(fs) * F.col(f"w{side}") - F.lit(_EPS),
         )
-    if max_token_freq is not None:
-        e = vocab.drop_hot(e, max_token_freq)
-        log.warning(
-            "set_join: dropping prefix tokens with freq > %d from candidate "
-            "generation — recall may drop below the exact contract", max_token_freq,
-        )
     return e
 
 
+def _sim_of(sim: str, o: Column, s1: Column, s2: Column) -> Column:
+    """sim from the (optionally weighted) overlap and the two set sizes."""
+    if sim == "jac":
+        return o / (s1 + s2 - o)
+    if sim == "cos":
+        return o / F.sqrt(s1.cast("double") * s2.cast("double"))
+    return F.lit(2.0) * o / (s1 + s2)
+
+
 def _sim_value(sim: str, weighted: bool, idf_arr: Column | None = None,
-               n_mask_words: int | None = None,
-               inline: "_InlineVocab | None" = None) -> Column:
-    t1, t2 = F.col("t1"), F.col("t2")
-    if n_mask_words and not weighted:
-        o = _mask_overlap("1", "2", n_mask_words).cast("double")
-        l1, l2 = F.col("len1"), F.col("len2")
-        if sim == "jac":
-            return o / (l1 + l2 - o)
-        if sim == "cos":
-            return o / F.sqrt(l1.cast("double") * l2.cast("double"))
-        return F.lit(2.0) * o / (l1 + l2)
-    if weighted and n_mask_words and inline is not None:
+               inline: _InlineVocab | None = None) -> Column:
+    """sim of a pair row from its (len|w, t|__bm) 1/2 columns — verified
+    from the mask words when the vocabulary inlined."""
+    n_mask = inline.n_words if inline is not None else None
+    if not weighted:
+        return _sim_of(sim, _overlap(n_mask).cast("double"), F.col("len1"), F.col("len2"))
+    w1, w2 = F.col("w1"), F.col("w2")
+    if n_mask:
         # byte-LUT weighted overlap over the mask intersection — codegen.
         # Its byte-wise sum order differs from the record weight's tid
         # order, so identical sets take their full weight as the overlap:
         # sim is then exactly 1.0, as for grouped identical sets.
-        w1, w2 = F.col("w1"), F.col("w2")
         same = F.col("__bm01") == F.col("__bm02")
-        for w in range(1, n_mask_words):
+        for w in range(1, n_mask):
             same = same & (F.col(f"__bm{w}1") == F.col(f"__bm{w}2"))
         wo = F.when(same, w1).otherwise(inline.weighted_overlap("1", "2"))
-        if sim == "jac":
-            return wo / (w1 + w2 - wo)
-        if sim == "cos":
-            return wo / F.sqrt(w1 * w2)
-        return F.lit(2.0) * wo / (w1 + w2)
-    if weighted:
-        if idf_arr is not None:
-            wo = F.aggregate(
-                F.array_intersect(t1, t2), F.lit(0.0),
-                lambda acc, t: acc + F.get(idf_arr, t),
-            )
-        else:
-            wo = F.aggregate(
-                F.array_intersect(t1, t2), F.lit(0.0),
-                lambda acc, t: acc + F.element_at(F.col("idf_map"), t),
-            )
-        w1, w2 = F.col("w1"), F.col("w2")
-        if sim == "jac":
-            return wo / (w1 + w2 - wo)
-        if sim == "cos":
-            return wo / F.sqrt(w1 * w2)
-        return F.lit(2.0) * wo / (w1 + w2)
-    o = F.size(F.array_intersect(t1, t2)).cast("double")
-    l1, l2 = F.col("len1"), F.col("len2")
-    if sim == "jac":
-        return o / (l1 + l2 - o)
-    if sim == "cos":
-        return o / F.sqrt(l1.cast("double") * l2.cast("double"))
-    return F.lit(2.0) * o / (l1 + l2)
-
-
-def _ta_score_cols(n_mask_words: int | None) -> Column:
-    """The 4-sim TA score (jac + cos + dice + overlapCoeff) over the join's
-    verify columns — bitmask overlap when available, array_intersect
-    otherwise. Formula/operand order identical to topk.ta_score, so the
-    doubles are bit-compatible with the TA oracle."""
-    if n_mask_words:
-        od = _mask_overlap("1", "2", n_mask_words).cast("double")
     else:
-        od = F.size(F.array_intersect(F.col("t1"), F.col("t2"))).cast("double")
-    l1 = F.col("len1").cast("double")
-    l2 = F.col("len2").cast("double")
-    jac = F.when(l1 + l2 - od > 0, od / (l1 + l2 - od)).otherwise(F.lit(0.0))
-    cos = F.when(l1 * l2 > 0, od / F.sqrt(l1 * l2)).otherwise(F.lit(0.0))
-    dice = F.when(l1 + l2 > 0, F.lit(2.0) * od / (l1 + l2)).otherwise(F.lit(0.0))
-    oc = F.when(F.least(l1, l2) > 0, od / F.least(l1, l2)).otherwise(F.lit(0.0))
+        def idf(t: Column) -> Column:
+            if idf_arr is not None:
+                return F.get(idf_arr, t)
+            return F.element_at(F.col("idf_map"), t)
+
+        wo = F.aggregate(F.array_intersect("t1", "t2"), F.lit(0.0),
+                         lambda acc, t: acc + idf(t))
+    return _sim_of(sim, wo, w1, w2)
+
+
+def _ta_score(o: Column, l1: Column, l2: Column) -> Column:
+    """The 4-sim TA score (jac + cos + dice + overlapCoeff, the row upper
+    bound of topk.cc:588-613) from the overlap and both set sizes — the one
+    copy of the formula, so every top-K path yields bit-identical doubles.
+    Each term is 0.0 where its denominator is."""
+    o, l1, l2 = o.cast("double"), l1.cast("double"), l2.cast("double")
+    jac = F.when(l1 + l2 - o > 0, o / (l1 + l2 - o)).otherwise(F.lit(0.0))
+    cos = F.when(l1 * l2 > 0, o / F.sqrt(l1 * l2)).otherwise(F.lit(0.0))
+    dice = F.when(l1 + l2 > 0, F.lit(2.0) * o / (l1 + l2)).otherwise(F.lit(0.0))
+    oc = F.when(F.least(l1, l2) > 0, o / F.least(l1, l2)).otherwise(F.lit(0.0))
     return jac + cos + dice + oc
+
+
+def _size_filter(sim: str, threshold: float, weighted: bool) -> Column:
+    """Length filter of a pair row: the smaller set holds at least f(t) of
+    the larger's tokens (weighted: of its weight)."""
+    f = _prefix_factor(sim, threshold)
+    s1, s2 = ("w1", "w2") if weighted else ("len1", "len2")
+    lo, hi = F.least(s1, s2), F.greatest(s1, s2)
+    if weighted:
+        return lo >= F.lit(f) * hi - F.lit(_EPS)
+    return lo >= F.ceil(F.lit(f) * hi - F.lit(_EPS))
 
 
 def _fused_verify(joined: DataFrame, sim: str, threshold: float, weighted: bool,
                   sim_col: str, canonicalize: bool,
                   idf_arr: Column | None = None,
-                  n_mask_words: int | None = None,
-                  inline: "_InlineVocab | None" = None,
+                  inline: _InlineVocab | None = None,
                   ta_col: str | None = None) -> DataFrame:
     """length + positional filters and inline similarity verification —
     all inside the join's codegen stage; no candidate materialization.
@@ -596,26 +577,22 @@ def _fused_verify(joined: DataFrame, sim: str, threshold: float, weighted: bool,
     ``ta_col``: optionally also emit the 4-sim TA score (computed from the
     same verify columns in the same stage) — the fused top-K path consumes
     it without re-deriving groups or re-intersecting (guide §2.4)."""
-    f = _prefix_factor(sim, threshold)
+    j = joined.filter(_size_filter(sim, threshold, weighted))
     if weighted:
-        # weighted analogues: weight ratio filter + suffix-weight positional
-        lo, hi = F.least("w1", "w2"), F.greatest("w1", "w2")
-        j = joined.filter(lo >= F.lit(f) * hi - F.lit(_EPS))
+        # weighted analogue of the positional filter: suffix weights
         ub = F.least("suffix1", "suffix2")
         j = j.filter(ub >= _min_weighted_overlap(sim, threshold, F.col("w1"), F.col("w2"))
                      - F.lit(_EPS))
     else:
-        lo, hi = F.least("len1", "len2"), F.greatest("len1", "len2")
-        j = joined.filter(lo >= F.ceil(F.lit(f) * hi - F.lit(_EPS)))
         ub = F.lit(1) + F.least(F.col("len1") - F.col("pos1") - 1,
                                 F.col("len2") - F.col("pos2") - 1)
         j = j.filter(ub >= _min_overlap(sim, threshold, F.col("len1"), F.col("len2")))
-    j = j.withColumn(sim_col,
-                     _sim_value(sim, weighted, idf_arr, n_mask_words, inline)
+    j = j.withColumn(sim_col, _sim_value(sim, weighted, idf_arr, inline)
                      ).filter(F.col(sim_col) >= threshold)
     extra = [ta_col] if ta_col else []
     if ta_col:
-        j = j.withColumn(ta_col, _ta_score_cols(n_mask_words))
+        n_mask = inline.n_words if inline is not None else None
+        j = j.withColumn(ta_col, _ta_score(_overlap(n_mask), F.col("len1"), F.col("len2")))
     if canonicalize:
         out = j.select(F.least("rid1", "rid2").alias("id1"),
                        F.greatest("rid1", "rid2").alias("id2"), sim_col, *extra)
@@ -630,7 +607,6 @@ def _join_vocab(
     weighted: bool,
     dictionary: DataFrame | None,
     broadcast_dict: bool,
-    max_idf_literal_entries: int | None,
 ) -> tuple[_Vocab, Column | None]:
     """(vocab, idf_arr) for a set join: the resolved vocabulary and, for
     weighted joins, the global tid->idf literal when the vocabulary fits it
@@ -641,20 +617,93 @@ def _join_vocab(
     vocab = resolve_vocab(tokens_df, weighted, dictionary)
     if vocab.inline is not None:
         return vocab, vocab.inline.idf_arr if weighted else None
-    return vocab, _idf_literal(vocab, weighted, broadcast_dict,
-                               max_idf_literal_entries)
+    return vocab, _idf_literal(vocab, weighted, broadcast_dict)
 
 
-def _group_sets(enc: DataFrame, keep: list[str]) -> DataFrame:
-    """Records with IDENTICAL token sets as one row: (tids, members, rid,
-    *keep). The group key is the min member id — deterministic and stable
-    across cache loss / recompute (a monotonically_increasing_id here
-    silently mis-joined the member expansion when a persisted partition was
-    re-derived; see ADVICE r2)."""
+def _group_sets(df: DataFrame, key: str,
+                keep: list[str] | tuple[str, ...] = ()) -> DataFrame:
+    """Records (``rid``) with IDENTICAL ``key`` values as one persisted row:
+    (key, members, rid, *keep) — the reference's group trick
+    (``cpp/feature/feature_index.cc``). The group key ``rid`` is the min
+    member id — deterministic and stable across cache loss / recompute (a
+    monotonically_increasing_id here silently mis-joined the member
+    expansion when a persisted partition was re-derived; see ADVICE r2)."""
     return persist_tracked(
-        enc.groupBy("tids").agg(F.collect_list("rid").alias("members"),
-                                F.min("rid").alias("rid"),
-                                *[F.first(c).alias(c) for c in keep]))
+        df.groupBy(key).agg(F.collect_list("rid").alias("members"),
+                            F.min("rid").alias("rid"),
+                            *[F.first(c).alias(c) for c in keep]))
+
+
+def _expand_pairs(set_pairs: DataFrame, groups: DataFrame | None, value_col: str,
+                  intra_value: float) -> DataFrame:
+    """Record pairs (id1 < id2, value_col) from set-level pairs keyed by each
+    group's min member: every cross pair of two groups' members inherits its
+    set pair's value, and every pair within one group takes ``intra_value``
+    (what identical sets score). Each unordered record pair descends from
+    exactly one set(-pair), so no dedup shuffle is needed. Set pairs that
+    already carry both member lists (``m1``, ``m2``) are not joined again.
+    ``groups=None`` means the join ran over records: the pairs are returned
+    as they are."""
+    if groups is None:
+        return set_pairs
+    if "m1" not in set_pairs.columns:  # a verify join may have fetched them
+        g1 = groups.select(F.col("rid").alias("id1"), F.col("members").alias("m1"))
+        g2 = groups.select(F.col("rid").alias("id2"), F.col("members").alias("m2"))
+        set_pairs = set_pairs.join(g1, "id1").join(g2, "id2")
+    cross = (
+        set_pairs
+        .withColumn("a", F.explode("m1"))
+        .withColumn("b", F.explode("m2"))
+        .select(F.least("a", "b").alias("id1"), F.greatest("a", "b").alias("id2"),
+                value_col)
+    )
+    intra = (
+        groups.filter(F.size("members") >= 2)
+        .select(F.explode("members").alias("a"), "members")
+        .select("a", F.explode("members").alias("b"))
+        .filter(F.col("a") < F.col("b"))
+        .select(F.col("a").alias("id1"), F.col("b").alias("id2"),
+                F.lit(intra_value).alias(value_col))
+    )
+    return cross.unionByName(intra)
+
+
+def _sweep(
+    left: DataFrame,
+    right: DataFrame | None,
+    sim: str,
+    threshold: float,
+    weighted: bool,
+    inline: _InlineVocab,
+    sim_col: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The all-pairs bitmask sweep over encoded records (``right=None``: the
+    self join): (set pairs, left groups, right groups).
+
+    Identical sets are grouped per side, and the broadcast square over the
+    DISTINCT sets applies the length (weighted: weight-ratio) filter in the
+    join and verifies from the mask words — each set pair once,
+    with zero exchanges of prefix entries. The set pairs are (rid1, rid2,
+    len|w 1/2, __bm* 1/2, sim_col) keyed by each group's min member, and the
+    self join emits each unordered pair once (rid1 < rid2). The suffix-
+    weight bound of the prefix path only prunes candidates there; every
+    pair is fully verified here, so dropping it cannot change the output."""
+    n_mask = inline.n_words
+    size, src = ("w", "wt") if weighted else ("len", "len")
+    keep = [src] + [f"__bm{w}" for w in range(n_mask)]
+    g_left = _group_sets(left, "tids", keep)
+    g_right = g_left if right is None else _group_sets(right, "tids", keep)
+
+    def side(groups: DataFrame, i: str) -> DataFrame:
+        return groups.select(F.col("rid").alias(f"rid{i}"),
+                             F.col(src).alias(f"{size}{i}"), *_bm_cols(n_mask, i))
+
+    on = F.col("rid1") < F.col("rid2") if right is None else None
+    j = (_fan_out(side(g_left, "1")).join(F.broadcast(side(g_right, "2")), on)
+         .filter(_size_filter(sim, threshold, weighted)))
+    j = j.withColumn(sim_col, _sim_value(sim, weighted, None, inline)
+                     ).filter(F.col(sim_col) >= threshold)
+    return j, g_left, g_right
 
 
 def _self_join_parts(
@@ -666,12 +715,8 @@ def _self_join_parts(
     weighted: bool = False,
     dictionary: DataFrame | None = None,
     broadcast_dict: bool = True,
-    max_token_freq: int | None = None,
     sim_col: str = "sim",
-    group_identical: bool = True,
-    max_idf_literal_entries: int | None = None,
     ta_col: str | None = None,
-    singleton_groups: bool = True,
 ) -> tuple[DataFrame, DataFrame | None]:
     """The self join up to (but not including) member expansion: returns
     (verified, groups) — shared by the public join, the fused top-K path and
@@ -681,67 +726,36 @@ def _self_join_parts(
     On the all-pairs sweep ``verified`` holds SET-level pairs keyed by each
     group's min member and ``groups`` is (rid, members, ...). On the prefix
     path the join runs over records: ``verified`` holds record pairs and
-    ``groups`` is the singleton projection (rid, members=[rid]), no shuffle
-    — or None with ``singleton_groups=False``."""
+    ``groups`` is None."""
     vocab, idf_arr = _join_vocab(df.select(F.col(tokens_col).alias("tokens")),
-                                 weighted, dictionary, broadcast_dict,
-                                 max_idf_literal_entries)
+                                 weighted, dictionary, broadcast_dict)
     inline = vocab.inline
     need_map = weighted and idf_arr is None
     n_mask = inline.n_words if inline is not None else None
-    # the sweep decision is known before any record work: skip the weighted
-    # suffix-scan when the masks will verify every pair directly
-    use_sweep = (group_identical and inline is not None
-                 and (not weighted or ta_col is None)  # TA score needs len cols
-                 and vocab.n_sets_approx is not None
-                 and vocab.n_sets_approx <= MAX_ALLPAIRS_SETS)
-    enc = _prepare(df, id_col, tokens_col, vocab.dictionary, weighted, broadcast_dict,
-                   need_idf_map=need_map, n_mask_words=n_mask, inline=inline,
-                   need_suffixs=not use_sweep)
     # All-pairs bitmask sweep for tiny-vocabulary, few-distinct-set corpora
     # (valve-gated, guide §1.2 "the distributed algorithm"): when the probed
     # vocabulary inlines AND the HLL distinct-set estimate says the full
     # set-pair square is small, the prefix filter cannot prune — hot tokens
     # appear in most prefixes, so the explode+equi-join emits ~as many
     # candidates as the square holds while paying an exploded shuffle for
-    # them. A broadcast inequality join over the distinct-set table with the
-    # SAME fused length filter + bitmask verify emits each set pair exactly
-    # once with zero exchanges of entry rows (measured 0.9s vs 1.2-3.2s on
-    # the sf0.1 corpus, identical output). Only this path groups identical
-    # sets: the square is over DISTINCT sets. Real vocabularies (> 256
-    # tokens) or set counts beyond the cap take the prefix path.
+    # them (measured 0.9s vs 1.2-3.2s on the sf0.1 corpus, identical
+    # output). Only this path groups identical sets: the square is over
+    # DISTINCT sets. Real vocabularies (> 256 tokens) or set counts beyond
+    # the cap take the prefix path. The decision is known before any record
+    # work, so the sweep skips the weighted suffix scan.
+    use_sweep = (inline is not None
+                 and (not weighted or ta_col is None)  # TA score needs len cols
+                 and vocab.n_sets_approx is not None
+                 and vocab.n_sets_approx <= MAX_ALLPAIRS_SETS)
+    enc = _prepare(df, id_col, tokens_col, vocab.dictionary, weighted, broadcast_dict,
+                   need_idf_map=need_map, inline=inline, need_suffixs=not use_sweep)
     if use_sweep:
-        keep = ["len"] + (["wt"] if weighted else [])
-        groups = _group_sets(enc, keep + [f"__bm{w}" for w in range(n_mask)])
-        f = _prefix_factor(sim, threshold)
-        size1, size2 = ("w1", "w2") if weighted else ("len1", "len2")
-        size_src = "wt" if weighted else "len"
-        a_side = groups.select(
-            F.col("rid").alias("rid1"), F.col(size_src).alias(size1),
-            *[F.col(f"__bm{w}").alias(f"__bm{w}1") for w in range(n_mask)])
-        par = df.sparkSession.sparkContext.defaultParallelism
-        a_side = a_side.repartition(2 * par)
-        b_side = groups.select(
-            F.col("rid").alias("rid2"), F.col(size_src).alias(size2),
-            *[F.col(f"__bm{w}").alias(f"__bm{w}2") for w in range(n_mask)])
-        j = a_side.join(F.broadcast(b_side), F.col("rid1") < F.col("rid2"))
-        lo, hi = F.least(size1, size2), F.greatest(size1, size2)
-        if weighted:
-            # weighted analogue of the length filter (same predicate the
-            # prefix path's _fused_verify applies); the suffix-weight upper
-            # bound is only a candidate pruner there — every pair is fully
-            # verified by the byte-LUT sim below, so dropping it cannot
-            # change the output
-            j = j.filter(lo >= F.lit(f) * hi - F.lit(_EPS))
-        else:
-            j = j.filter(lo >= F.ceil(F.lit(f) * hi - F.lit(_EPS)))
-        j = j.withColumn(sim_col, _sim_value(sim, weighted, None, n_mask, inline)
-                         ).filter(F.col(sim_col) >= threshold)
+        j, groups, _ = _sweep(enc, None, sim, threshold, weighted, inline, sim_col)
+        extra = []
         if ta_col:
-            j = j.withColumn(ta_col, _ta_score_cols(n_mask))
-        extra = [ta_col] if ta_col else []
-        # rid1 < rid2 already — no canonicalization or dedup needed (each
-        # unordered set pair is generated exactly once)
+            j = j.withColumn(ta_col, _ta_score(_overlap(n_mask), F.col("len1"),
+                                               F.col("len2")))
+            extra = [ta_col]
         verified = j.select(F.col("rid1").alias("id1"),
                             F.col("rid2").alias("id2"), sim_col, *extra)
         return verified, groups
@@ -749,18 +763,10 @@ def _self_join_parts(
     # at every set:record ratio measured (4,788 sets over 7,573 pages, 243k
     # over 250k at 100k entities): the two aggregate shuffles and the member
     # expansion cost more than the duplicate rows they save.
-    e = _entries(enc, "1", sim, threshold, weighted, max_token_freq, vocab,
+    e = _entries(enc, "1", sim, threshold, weighted,
                  need_idf_map=need_map, n_mask_words=n_mask)
-    # fan-out repartition: the probe-entry table is small relative to the
-    # candidates the join EMITS (output explosion); without this, AQE
-    # right-sizes partitions to the tiny input and the whole verify stage
-    # runs in a couple of tasks no matter how many cores exist
-    par = df.sparkSession.sparkContext.defaultParallelism
-    a = e.filter(F.col("short1")).repartition(2 * par)
-    b_renames = {"rid1": "rid2", "t1": "t2", "len1": "len2",
-                 "short1": "short2", "pos1": "pos2", "w1": "w2", "suffix1": "suffix2"}
-    b_renames.update({f"__bm{w}1": f"__bm{w}2" for w in range(n_mask or 0)})
-    b = e.drop("idf_map").withColumnsRenamed(b_renames)
+    a = _fan_out(e.filter(F.col("short1")))
+    b = _entries(enc, "2", sim, threshold, weighted, n_mask_words=n_mask)
     # the indexing (short) prefix applies to the pair's smaller side —
     # smaller by token count (unweighted) / record weight (weighted)
     m1, m2 = ("w1", "w2") if weighted else ("len1", "len2")
@@ -775,10 +781,8 @@ def _self_join_parts(
     )
     verified = _fused_verify(joined, sim, threshold, weighted, sim_col,
                              canonicalize=True, idf_arr=idf_arr,
-                             n_mask_words=n_mask, inline=inline, ta_col=ta_col)
-    groups = (enc.select("rid", F.array("rid").alias("members"))
-              if singleton_groups else None)
-    return verified, groups
+                             inline=inline, ta_col=ta_col)
+    return verified, None
 
 
 def set_similarity_self_join(
@@ -790,49 +794,21 @@ def set_similarity_self_join(
     weighted: bool = False,
     dictionary: DataFrame | None = None,
     broadcast_dict: bool = True,
-    max_token_freq: int | None = None,
     sim_col: str = "sim",
-    group_identical: bool = True,
-    max_idf_literal_entries: int | None = None,
 ) -> DataFrame:
     """All pairs (id1 < id2) with sim(tokens) >= threshold. See module doc.
 
-    ``group_identical``: allows the all-pairs sweep, where records with
-    IDENTICAL token sets join as ONE set-level row (the reference's
-    group/cluster trick, ``cpp/feature/feature_index.cc`` grouping) — the
-    broadcast square runs over distinct sets only, then pairs expand from
-    the member lists: cross-set pairs inherit the verified set-level sim,
-    intra-set pairs are sim = 1.0 by identity. The prefix path joins
-    records either way (same rows: identical sets verify to exactly 1.0);
-    ``False`` also keeps tiny vocabularies on the prefix path."""
+    On the all-pairs sweep records with IDENTICAL token sets join as ONE
+    set-level row, then pairs expand from the member lists: cross-set pairs
+    inherit the verified set-level sim, intra-set pairs are sim = 1.0 by
+    identity. The prefix path joins records (same rows: identical sets
+    verify to exactly 1.0)."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
     verified, groups = _self_join_parts(
         df, id_col, tokens_col, sim, threshold, weighted, dictionary,
-        broadcast_dict, max_token_freq, sim_col, group_identical,
-        max_idf_literal_entries, singleton_groups=False)
-    if groups is None:
-        return verified
-    # expand set-level pairs back to record pairs; no dedup shuffle needed —
-    # each unordered record pair descends from exactly one set(-pair)
-    g1 = groups.select(F.col("rid").alias("id1"), F.col("members").alias("m1"))
-    g2 = groups.select(F.col("rid").alias("id2"), F.col("members").alias("m2"))
-    cross = (
-        verified.join(g1, "id1").join(g2, "id2")
-        .withColumn("a", F.explode("m1"))
-        .withColumn("b", F.explode("m2"))
-        .select(F.least("a", "b").alias("id1"), F.greatest("a", "b").alias("id2"),
-                sim_col)
-    )
-    intra = (
-        groups.filter(F.size("members") >= 2)
-        .select(F.explode("members").alias("a"), "members")
-        .select("a", F.explode("members").alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .select(F.col("a").alias("id1"), F.col("b").alias("id2"),
-                F.lit(1.0).alias(sim_col))
-    )
-    return cross.unionByName(intra)
+        broadcast_dict, sim_col)
+    return _expand_pairs(verified, groups, sim_col, 1.0)
 
 
 def set_similarity_rs_join(
@@ -845,9 +821,7 @@ def set_similarity_rs_join(
     weighted: bool = False,
     dictionary: DataFrame | None = None,
     broadcast_dict: bool = True,
-    max_token_freq: int | None = None,
     sim_col: str = "sim",
-    max_idf_literal_entries: int | None = None,
 ) -> DataFrame:
     """All (r, s) pairs with sim >= threshold; dictionary/IDF over R ∪ S.
 
@@ -855,45 +829,22 @@ def set_similarity_rs_join(
     treat the R side as smaller)."""
     union = df_r.select(F.col(tokens_col).alias("tokens")).unionAll(
         df_s.select(F.col(tokens_col).alias("tokens")))
-    vocab, idf_arr = _join_vocab(union, weighted, dictionary, broadcast_dict,
-                                 max_idf_literal_entries)
+    vocab, idf_arr = _join_vocab(union, weighted, dictionary, broadcast_dict)
     inline, dictionary = vocab.inline, vocab.dictionary
     need_map = weighted and idf_arr is None
     n_mask = inline.n_words if inline is not None else None
-    # RS flavor of the all-pairs sweep (same valve as the self join): group
-    # identical sets per side, broadcast-join the R-group × S-group square
-    # with the length(/weight-ratio) filter AS the join condition, verify
-    # from the bitmasks, expand members after. Each (R-group, S-group) pair
-    # is generated exactly once, so the two directional prefix joins AND
-    # their dedup exchange disappear.
+    # RS flavor of the all-pairs sweep (same valve as the self join): the
+    # R-group x S-group square, members expanded after. Each (R-group,
+    # S-group) pair is generated exactly once, so the two directional prefix
+    # joins AND their dedup exchange disappear.
     use_sweep = (inline is not None and vocab.n_sets_approx is not None
                  and vocab.n_sets_approx <= MAX_ALLPAIRS_SETS)
     left = _prepare(df_r, id_col, tokens_col, dictionary, weighted, broadcast_dict,
-                    need_idf_map=need_map, n_mask_words=n_mask, inline=inline,
-                    need_suffixs=not use_sweep)
+                    need_idf_map=need_map, inline=inline, need_suffixs=not use_sweep)
     right = _prepare(df_s, id_col, tokens_col, dictionary, weighted, broadcast_dict,
-                     need_idf_map=need_map, n_mask_words=n_mask, inline=inline,
-                     need_suffixs=not use_sweep)
+                     need_idf_map=need_map, inline=inline, need_suffixs=not use_sweep)
     if use_sweep:
-        f = _prefix_factor(sim, threshold)
-        size1, size2 = ("w1", "w2") if weighted else ("len1", "len2")
-        size_src = "wt" if weighted else "len"
-        keep = [size_src] + [f"__bm{w}" for w in range(n_mask)]
-        gl, gr = _group_sets(left, keep), _group_sets(right, keep)
-        a = gl.select(F.col("rid").alias("rid1"), F.col(size_src).alias(size1),
-                      *[F.col(f"__bm{w}").alias(f"__bm{w}1") for w in range(n_mask)])
-        par = df_r.sparkSession.sparkContext.defaultParallelism
-        a = a.repartition(2 * par)
-        b = gr.select(F.col("rid").alias("rid2"), F.col(size_src).alias(size2),
-                      *[F.col(f"__bm{w}").alias(f"__bm{w}2") for w in range(n_mask)])
-        lo, hi = F.least(size1, size2), F.greatest(size1, size2)
-        if weighted:
-            cond = lo >= F.lit(f) * hi - F.lit(_EPS)
-        else:
-            cond = lo >= F.ceil(F.lit(f) * hi - F.lit(_EPS))
-        j = a.join(F.broadcast(b), cond)
-        j = j.withColumn(sim_col, _sim_value(sim, weighted, None, n_mask, inline)
-                         ).filter(F.col(sim_col) >= threshold)
+        j, gl, gr = _sweep(left, right, sim, threshold, weighted, inline, sim_col)
         m1 = gl.select(F.col("rid").alias("rid1"), F.col("members").alias("mm1"))
         m2 = gr.select(F.col("rid").alias("rid2"), F.col("members").alias("mm2"))
         return (
@@ -902,20 +853,15 @@ def set_similarity_rs_join(
             .withColumn("a", F.explode("mm1")).withColumn("b", F.explode("mm2"))
             .select(F.col("a").alias("id1"), F.col("b").alias("id2"), sim_col)
         )
-    l = _entries(left, "1", sim, threshold, weighted, max_token_freq, vocab,
+    l = _entries(left, "1", sim, threshold, weighted,
                  need_idf_map=need_map, n_mask_words=n_mask)
-    r = _entries(right, "2", sim, threshold, weighted, max_token_freq, vocab,
+    r = _entries(right, "2", sim, threshold, weighted,
                  need_idf_map=need_map, n_mask_words=n_mask)
     m1, m2 = ("w1", "w2") if weighted else ("len1", "len2")
-    # fan-out repartition: see the self join — the probe side must be wide
-    # enough for the candidate-explosion stage to use the cluster
-    par = df_r.sparkSession.sparkContext.defaultParallelism
-    a1 = l.filter(F.col("short1")).repartition(2 * par)
-    c1 = a1.join(r, "tok").filter(F.col(m1) <= F.col(m2))
-    a2 = r.filter(F.col("short2")).repartition(2 * par)
-    c2 = a2.join(l, "tok").filter(F.col(m2) < F.col(m1))
+    c1 = _fan_out(l.filter(F.col("short1"))).join(r, "tok").filter(F.col(m1) <= F.col(m2))
+    c2 = _fan_out(r.filter(F.col("short2"))).join(l, "tok").filter(F.col(m2) < F.col(m1))
     v1 = _fused_verify(c1, sim, threshold, weighted, sim_col, canonicalize=False,
-                       idf_arr=idf_arr, n_mask_words=n_mask, inline=inline)
+                       idf_arr=idf_arr, inline=inline)
     v2 = _fused_verify(c2, sim, threshold, weighted, sim_col, canonicalize=False,
-                       idf_arr=idf_arr, n_mask_words=n_mask, inline=inline)
+                       idf_arr=idf_arr, inline=inline)
     return v1.unionByName(v2).dropDuplicates(["id1", "id2"])

@@ -47,10 +47,3 @@ def with_normalized(df: DataFrame, col: str, strategy: int = 0,
                     out_col: str | None = None) -> DataFrame:
     """S8: optional normalization as a NEW column (raw text stays byte-identical)."""
     return df.withColumn(out_col or f"{col}_norm", normalize_string(F.col(col), strategy))
-
-
-def read_gold(spark: SparkSession, path: str, fmt: str = "csv") -> DataFrame:
-    """gold(id1, id2) pairs (utils.py:31-38 format: CSV id1,id2)."""
-    df = read_table(spark, path, fmt)
-    c1, c2 = df.columns[:2]
-    return df.select(F.col(c1).alias("id1"), F.col(c2).alias("id2"))

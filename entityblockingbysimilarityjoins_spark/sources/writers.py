@@ -12,7 +12,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,53 +52,3 @@ def read_pair_stats(path: str) -> dict:
     """stat.txt analogue reader."""
     with open(os.path.join(path, "_stats.json")) as f:
         return json.load(f)
-
-
-def write_sample_res(
-    sample: DataFrame,
-    records: DataFrame,
-    id_col: str,
-    attrs: list[str],
-    path: str,
-    fmt: str = "parquet",
-) -> None:
-    """S5: Megallen-style labeled sample (_id, id1, id2, l_*, r_*, label)."""
-    from ..matcher.features import attach_pair_payload
-
-    payload = attach_pair_payload(sample.select("id1", "id2", "label"),
-                                  records, id_col, attrs)
-    # deterministic global _id without a single-partition global window
-    # (VERDICT r4 #3): two-phase per-partition-offset rank, same pattern as
-    # functions/dictionary.py — range-partition by (id1, id2), number within
-    # each partition, add the broadcast running offset of earlier partitions.
-    from ..operators.cache import persist_tracked
-
-    n_parts = max(payload.sparkSession.sparkContext.defaultParallelism, 1)
-    parts = (
-        payload.repartitionByRange(n_parts, F.asc("id1"), F.asc("id2"))
-        .withColumn("__pid", F.spark_partition_id())
-        .transform(persist_tracked)
-    )
-    sizes = parts.groupBy("__pid").agg(F.count("*").alias("__n"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sizes.select(
-        "__pid", F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off"))
-    w_in = Window.partitionBy("__pid").orderBy(F.asc("id1"), F.asc("id2"))
-    out = (
-        parts.withColumn("__rn", F.row_number().over(w_in))
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn("_id", (F.col("__off") + F.col("__rn")).cast("int"))
-        .drop("__pid", "__rn", "__off")
-    )
-    out.write.mode("overwrite").format(fmt).save(path)
-    parts.unpersist()  # the write is the only consumer; double-unpersist via
-    # a later release_cached() is a no-op
-
-
-def write_pair_list(pairs: DataFrame, path: str, fmt: str = "csv") -> None:
-    """S6: bare (id1, id2) list (Snowman format analogue)."""
-    w = pairs.select("id1", "id2").write.mode("overwrite")
-    if fmt == "csv":
-        w.option("header", True).csv(path)
-    else:
-        w.format(fmt).save(path)

@@ -129,17 +129,3 @@ def neardup_stream(
     return base.groupBy("__bucket").applyInPandasWithState(
         dedup, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
     )
-
-
-def page_rate(
-    pages_stream: DataFrame,
-    ts_col: str = "warc_ts",
-    window: str = "10 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Tumbling-window page counts per lang (late data handled by watermark)."""
-    return (
-        pages_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window), F.col("lang"))
-        .agg(F.count("*").alias("n_pages"))
-    )

@@ -307,10 +307,13 @@ def rematch_negatives(
     values the forest cannot tell apart from the flat ones: cross products
     are the 1x1 raw pair (identical expressions), identical values hit the
     same-group branch whose constants equal the flat sims exactly, and the
-    one residual cell difference (flat NULL vs IC 0.0 on empty token sets)
-    vanishes under the matcher's NaN->0.0 imputation. This is also the
-    frozen oracle's own structure — its pass 2 swaps only the grouped
-    attribute's IC features into the pass-1 matrix."""
+    residual cell difference (flat NULL vs IC 0.0 on empty token sets)
+    vanishes under the matcher's NaN->0.0 imputation. One corner differs
+    in value: two identical non-empty values whose tokenization is empty
+    score 1.0 on the IC same-group branch but NULL->0.0 as the reused flat
+    feature. The flat 0.0 is the value the frozen oracle expects, as its
+    own structure shows — its pass 2 swaps only the grouped attribute's IC
+    features into the pass-1 matrix."""
     from ..matcher.random_forest import apply_matcher
 
     grouped = set(groups_per_attr)

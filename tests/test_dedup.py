@@ -158,11 +158,10 @@ def test_embedding_neardup_blas_equals_brute(spark):
     assert blas == brute
 
 
-def test_minhash_group_identical_toggle(spark):
-    """group_identical=False must produce the identical pair set (identical
-    sets then meet in the banded join instead of the intra-group expansion)."""
-    from pyspark.sql import functions as F
-
+def test_minhash_identical_sets_match_bruteforce(spark):
+    """Identical sets pair up through the intra-group expansion at exactly
+    1.0, and their cross pairs inherit the verified set-level Jaccard: the
+    output is the brute-force exact-Jaccard pair set."""
     from entityblockingbysimilarityjoins_spark.functions.tokenize import tokens_wspace
     from entityblockingbysimilarityjoins_spark.operators.dedup import minhash_lsh_pairs
 
@@ -172,12 +171,19 @@ def test_minhash_group_identical_toggle(spark):
     ]
     df = spark.createDataFrame(rows, ["rid", "s"]).withColumn(
         "tokens", tokens_wspace("s"))
-    a = {(r["id1"], r["id2"], round(r["jac"], 9)) for r in
-         minhash_lsh_pairs(df, "rid", "tokens", threshold=0.7).collect()}
-    b = {(r["id1"], r["id2"], round(r["jac"], 9)) for r in
-         minhash_lsh_pairs(df, "rid", "tokens", threshold=0.7,
-                           group_identical=False).collect()}
-    assert a == b and len(a) >= 6 + 4  # 4-clique at 1.0 + cross pairs
+    sets = {i: set(s.split()) for i, s in rows}
+    want = {}
+    for i, j in itertools.combinations(sorted(sets), 2):
+        jac = len(sets[i] & sets[j]) / len(sets[i] | sets[j])
+        if jac >= 0.7:
+            want[(i, j)] = jac
+    got = {(r["id1"], r["id2"]): r["jac"] for r in
+           minhash_lsh_pairs(df, "rid", "tokens", threshold=0.7).collect()}
+    assert len(want) == 6 + 4  # 4-clique at 1.0 + cross pairs at 0.8
+    assert got.keys() == want.keys()
+    for k, v in got.items():
+        assert v == pytest.approx(want[k], abs=1e-12), k
+    assert all(got[(i, j)] == 1.0 for i, j in itertools.combinations(range(4), 2))
 
 
 def _adversarial_near_identical(n=120, vocab=40):

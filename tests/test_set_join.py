@@ -127,7 +127,7 @@ def test_weighted_jaccard_matches_bruteforce(spark):
         assert r["sim"] == pytest.approx(wjac(s[r["id1"]], s[r["id2"]]), abs=1e-9)
 
 
-def test_weighted_map_path_equals_literal_path(spark):
+def test_weighted_map_path_equals_literal_path(spark, monkeypatch):
     # broadcast_dict=False exercises the per-record idf_map verification;
     # results must be identical to the global-literal fast path
     rows = _corpus(seed=9, n=40)
@@ -140,9 +140,12 @@ def test_weighted_map_path_equals_literal_path(spark):
     assert fast == slow and len(fast) > 0
     # vocab-size gate: a tiny literal cap must force the map path (no driver
     # collect of the vocabulary) and still produce identical results
+    import entityblockingbysimilarityjoins_spark.operators.set_join as SJ
+
+    monkeypatch.setattr(SJ, "MAX_IDF_LITERAL_ENTRIES", 4)
     gated = {(r["id1"], r["id2"]): round(r["sim"], 9) for r in
-             set_similarity_self_join(df, "rid", "tokens", "jac", 0.6, weighted=True,
-                                      max_idf_literal_entries=4).collect()}
+             set_similarity_self_join(df, "rid", "tokens", "jac", 0.6, weighted=True).collect()}
+    monkeypatch.undo()
     assert fast == gated
 
 

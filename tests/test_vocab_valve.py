@@ -1,10 +1,16 @@
-"""The inline-vocabulary valve as a contract (ROADMAP aim 3).
+"""The set joins' size valves as contracts (ROADMAP aim 3).
 
 ``resolve_vocab`` inlines vocabularies of at most MAX_BITSET_WORDS*64 = 256
 tokens and builds the distributed dictionary beyond that. Every join must
 return the brute-force oracle's rows on both sides of the cap, so each
 check runs on corpora with exactly cap-1, cap and cap+1 distinct tokens,
 duplicate token sets included.
+
+The all-pairs sweep fires when the HLL distinct-set estimate is at most
+MAX_ALLPAIRS_SETS. Its checks move that cap to cap-1, cap and cap+1 around
+a small corpus's estimate and demand the same rows on both sides, from
+every caller of the grouped sets. The job-count guards pin the grouped
+paths' Spark jobs on the 255-token corpus.
 """
 
 from __future__ import annotations
@@ -18,11 +24,17 @@ from pyspark.sql import functions as F
 
 from entityblockingbysimilarityjoins_spark.operators import set_join as SJ
 from entityblockingbysimilarityjoins_spark.operators.cache import release_cached
+from entityblockingbysimilarityjoins_spark.operators.connected_components import (
+    connected_components,
+    connected_components_over_groups,
+)
+from entityblockingbysimilarityjoins_spark.operators.dedup import minhash_lsh_pairs
 from entityblockingbysimilarityjoins_spark.operators.overlap_join import (
     overlap_rs_join,
     overlap_self_join,
 )
 from entityblockingbysimilarityjoins_spark.operators.set_join import (
+    _self_join_parts,
     resolve_vocab,
     set_similarity_rs_join,
     set_similarity_self_join,
@@ -39,6 +51,13 @@ SIZES = (CAP - 1, CAP, CAP + 1)
 #: vocabulary pass and no set grouping on the prefix path (the probe,
 #: recount, re-probe and grouping of the earlier shape took 34)
 MAX_PREFIX_PATH_JOBS = 17
+
+#: Spark jobs of the grouped (all-pairs sweep) paths on the cap-1 corpus,
+#: vocabulary probe included: the self join 15, fused top-K 14 (16 when it
+#: persisted the intra-group pairs with the set pairs) and MinHash 13
+MAX_SWEEP_JOIN_JOBS = 15
+MAX_SWEEP_TOPK_JOBS = 14
+MAX_MINHASH_JOBS = 13
 
 
 def _rows(n_tokens: int, seed: int = 17) -> list[tuple[int, list[str]]]:
@@ -193,26 +212,60 @@ def test_topk_over_self_join_across_cap(spark, n_tokens):
         assert fused and fused == unfused, k
 
 
+def _count_jobs(spark, group, action):
+    """(action's result, Spark jobs it ran), from a cold operator cache."""
+    release_cached()  # no cache hits from earlier tests on the same rows
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_prefix_path_job_count(spark):
     """Spark jobs of one self join on the cap+1 corpus: the vocabulary is
     probed once and ranked from the same aggregate, with no recount, no
     re-probe and no set grouping on the prefix path."""
-    release_cached()  # no cache hits from earlier tests on the same rows
-    spark.catalog.clearCache()
     df = _df(spark, _rows(CAP + 1))
-    sc = spark.sparkContext
-    group = "test_prefix_path_job_count"
-    sc.setJobGroup(group, group)
-    try:
-        rows = set_similarity_self_join(df, "rid", "tokens", "jac", 0.72).collect()
-    finally:
-        sc._jsc.clearJobGroup()
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    rows, n_jobs = _count_jobs(spark, "test_prefix_path_job_count", lambda:
+                               set_similarity_self_join(
+                                   df, "rid", "tokens", "jac", 0.72).collect())
     assert rows
     assert n_jobs <= MAX_PREFIX_PATH_JOBS, n_jobs
 
 
-def test_weighted_identical_sets_verify_to_one(spark):
+@pytest.mark.parametrize("op, max_jobs", [
+    ("self_join", MAX_SWEEP_JOIN_JOBS),
+    ("topk", MAX_SWEEP_TOPK_JOBS),
+    ("minhash", MAX_MINHASH_JOBS),
+])
+def test_grouped_path_job_count(spark, op, max_jobs):
+    """Spark jobs of the paths that group identical sets, on the cap-1
+    corpus (inline vocabulary, swept): the shared set-level helpers must not
+    add a job. The fewer of two cold runs counts: whether AQE materializes
+    a cached relation read in several places of a plan once or twice
+    depends on stage timing (MinHash once read 14 under load), while
+    an added job shows in every run."""
+    df = _df(spark, _rows(CAP - 1))
+    run = {
+        "self_join": lambda: set_similarity_self_join(
+            df, "rid", "tokens", "jac", 0.72),
+        "topk": lambda: topk_over_self_join(df, 7, "jac", 0.72),
+        "minhash": lambda: minhash_lsh_pairs(df, "rid", "tokens", threshold=0.72),
+    }[op]
+    counts = []
+    for i in range(2):
+        rows, n_jobs = _count_jobs(spark, f"test_grouped_path_job_count_{op}_{i}",
+                                   lambda: run().collect())
+        assert rows
+        counts.append(n_jobs)
+    assert min(counts) <= max_jobs, counts
+
+
+def test_weighted_identical_sets_verify_to_one(spark, monkeypatch):
     """Identical token sets are weighted-similar at exactly 1.0 on the
     bitmask path too (its byte-wise overlap sum runs in another order than
     the record weight's), so a threshold of 1.0 keeps them — on the
@@ -223,10 +276,91 @@ def test_weighted_identical_sets_verify_to_one(spark):
            if s[i] and s[i] == s[j]}
     assert dup
     df = _df(spark, rows)
+    monkeypatch.setattr(SJ, "MAX_ALLPAIRS_SETS", 0)  # records, not sets
     got = {(r["id1"], r["id2"]) for r in set_similarity_self_join(
-        df, "rid", "tokens", "jac", 1.0, weighted=True,
-        group_identical=False).collect()}
+        df, "rid", "tokens", "jac", 1.0, weighted=True).collect()}
+    monkeypatch.undo()
     assert got == dup
     got_rs = {(r["id1"], r["id2"]) for r in set_similarity_rs_join(
         df, df, "rid", "tokens", "cos", 1.0, weighted=True).collect()}
     assert {(i, i) for i in s if s[i]} <= got_rs
+
+
+def _sorted(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _sweep_caps(tokens_df) -> tuple[int, int, int]:
+    """MAX_ALLPAIRS_SETS at cap-1, cap and cap+1 around the corpus's HLL
+    distinct-set estimate: the prefix path, then the sweep twice."""
+    n = resolve_vocab(tokens_df, build=False).n_sets_approx
+    return n - 1, n, n + 1
+
+
+def _swept(df) -> bool:
+    """True when the set join's plan is the broadcast all-pairs square."""
+    return "BroadcastNestedLoopJoin" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_self_join_across_sweep_cap(spark, monkeypatch, weighted):
+    rows = _rows(CAP - 1)
+    df = _df(spark, rows)
+    for kind, t in (("jac", 0.72), ("cos", 0.81), ("dice", 0.81)):
+        got = []
+        for cap in _sweep_caps(df):
+            monkeypatch.setattr(SJ, "MAX_ALLPAIRS_SETS", cap)
+            res = set_similarity_self_join(df, "rid", "tokens", kind, t,
+                                           weighted=weighted)
+            got.append((_swept(res), _sorted(res)))
+        assert [g[0] for g in got] == [False, True, True], kind
+        assert got[0][1] and got[0][1] == got[1][1] == got[2][1], kind
+
+
+def test_rs_join_across_sweep_cap(spark, monkeypatch):
+    rows = _rows(CAP - 1)
+    r_df = _df(spark, [x for x in rows if x[0] % 2 == 0])
+    s_df = _df(spark, [x for x in rows if x[0] % 2 == 1])
+    got = []
+    for cap in _sweep_caps(r_df.unionAll(s_df)):
+        monkeypatch.setattr(SJ, "MAX_ALLPAIRS_SETS", cap)
+        res = set_similarity_rs_join(r_df, s_df, "rid", "tokens", "jac", 0.72)
+        got.append((_swept(res), _sorted(res)))
+    assert [g[0] for g in got] == [False, True, True]
+    assert got[0][1] and got[0][1] == got[1][1] == got[2][1]
+
+
+def test_topk_over_self_join_across_sweep_cap(spark, monkeypatch):
+    """Fused top-K == the unfused composition on both sides of the sweep
+    cap, and the same ranking on each side. k=500 ranks every pair (no
+    group-level threshold); k=7 must be its first 7 rows (thresholded)."""
+    df = _df(spark, _rows(CAP - 1))
+    got = []
+    for cap in _sweep_caps(df):
+        monkeypatch.setattr(SJ, "MAX_ALLPAIRS_SETS", cap)
+        pairs = set_similarity_self_join(df, "rid", "tokens", "jac", 0.72)
+        unfused = [tuple(r) for r in topk_via_ta(pairs, df, 500).select(
+            "id1", "id2", "score").collect()]
+        fused = {k: [tuple(r) for r in topk_over_self_join(df, k, "jac", 0.72).collect()]
+                 for k in (7, 500)}
+        assert len(unfused) > 7 and fused[500] == unfused, cap
+        assert fused[7] == unfused[:7], cap
+        got.append(unfused)
+    assert got[0] == got[1] == got[2]
+
+
+def test_cc_over_groups_across_sweep_cap(spark, monkeypatch):
+    """Set-level CC == CC over the expanded join on both sides of the sweep
+    cap, and the same labels on each side."""
+    df = _df(spark, _rows(CAP - 1))
+    got = []
+    for cap in _sweep_caps(df):
+        monkeypatch.setattr(SJ, "MAX_ALLPAIRS_SETS", cap)
+        verified, groups = _self_join_parts(df, "rid", "tokens", "jac", 0.72)
+        fused = _sorted(connected_components_over_groups(
+            verified.select("id1", "id2"), groups))
+        pairs = set_similarity_self_join(df, "rid", "tokens", "jac", 0.72)
+        want = _sorted(connected_components(pairs.select("id1", "id2")))
+        assert fused and fused == want, cap
+        got.append(fused)
+    assert got[0] == got[1] == got[2]
