@@ -26,9 +26,9 @@ Scale notes:
   partitions) reaches the driver, never the vocabulary. The rank is a pure
   function of the unique total order (freq, token), so tids are identical
   wherever the range boundaries land.
-- encoding joins the (exploded) corpus with the dictionary: broadcast when it
-  fits (``broadcast_threshold``), shuffle hash join otherwise (100 TB corpora
-  have vocabularies far beyond broadcast).
+- encoding joins the (exploded) corpus with the dictionary, which is always
+  broadcast: every executor holds the whole vocabulary. A vocabulary beyond
+  what a broadcast can hold is an open limit (ROADMAP).
 """
 
 from __future__ import annotations
@@ -101,60 +101,31 @@ def encode_tokens(
     id_col: str = "rid",
     tokens_col: str = "tokens",
     out_col: str = "tids",
-    weight_col: str | None = "wt",
-    broadcast_dict: bool = True,
     idfs_col: str | None = None,
-    drop_empty: bool = False,
 ) -> DataFrame:
-    """Re-encode string-token arrays as sorted int-id arrays (+ IDF record weight).
+    """(id_col, out_col[, idfs_col]): string-token arrays re-encoded as sorted
+    int-id arrays through the broadcast dictionary.
 
-    Sorted ascending == rarest-first (see module doc). Rows whose token set is
-    empty keep an empty array and weight 0.0 (DROP_EMPTY happens later, at the
-    join's filter, matching setjoin.cc:199-202 semantics).
+    Sorted ascending == rarest-first (see module doc). Records with no
+    dictionary token emit no exploded row, so they are absent (the joins drop
+    empty token sets anyway, setjoin.cc:199-202): the groupBy output IS the
+    encoding, with no join back onto ``df``. Only ``id_col`` survives from
+    ``df``.
 
     ``idfs_col``: optionally also emit the per-token idf array aligned with
-    ``out_col`` (idfs[i] = idf of tids[i]) — weighted joins derive suffix
-    weights and the verification map from it with pure projections, no extra
-    shuffle.
-
-    ``drop_empty``: callers that filter empty token sets right away (every
-    set/overlap join) skip the join back onto ``df`` entirely — the groupBy
-    output IS the non-empty encoding (a record with zero dictionary tokens
-    emits no exploded rows), removing one join + its exchange from every
-    join's prepare stage (guide §2.4). Only ``id_col`` survives from ``df``
-    in this mode."""
-    d = dictionary.select("token", "tid", "idf")
-    if broadcast_dict:
-        d = F.broadcast(d)
+    ``out_col`` (idfs[i] = idf of tids[i]) — weighted joins derive the record
+    weight, suffix weights and the verification map from it with pure
+    projections, no extra shuffle."""
+    d = F.broadcast(dictionary.select("token", "tid", "idf"))
     exploded = df.select(id_col, F.explode(tokens_col).alias("token"))
     # array_sort on (tid, idf) structs orders by tid — tids and idfs stay
     # aligned through one aggregation
-    enc = (
+    pairs = (
         exploded.join(d, "token")
         .groupBy(id_col)
         .agg(F.array_sort(F.collect_list(F.struct("tid", "idf"))).alias("__p"))
-        .select(
-            id_col,
-            F.transform("__p", lambda x: x["tid"]).alias(out_col),
-            F.transform("__p", lambda x: x["idf"]).alias("__idfs"),
-        )
     )
-    if drop_empty:
-        out = enc
-    else:
-        out = (
-            df.join(enc, id_col, "left")
-            .withColumn(out_col, F.coalesce(F.col(out_col), F.array().cast("array<int>")))
-            .withColumn("__idfs", F.coalesce(F.col("__idfs"), F.array().cast("array<double>")))
-        )
-    out = out.withColumn(out_col, F.col(out_col).cast("array<int>"))
-    if weight_col is not None:
-        out = out.withColumn(
-            weight_col,
-            F.aggregate("__idfs", F.lit(0.0), lambda acc, x: acc + x),
-        )
+    cols = [id_col, F.transform("__p", lambda x: x["tid"]).cast("array<int>").alias(out_col)]
     if idfs_col is not None:
-        out = out.withColumnRenamed("__idfs", idfs_col)
-    else:
-        out = out.drop("__idfs")
-    return out
+        cols.append(F.transform("__p", lambda x: x["idf"]).alias(idfs_col))
+    return pairs.select(*cols)

@@ -23,7 +23,6 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.dictionary import build_dictionary
 from ..functions.tokenize import tokenizer
 from ..sources.rules import Rule
 from .edit_join import edit_distance_self_join
@@ -37,11 +36,10 @@ log = logging.getLogger(__name__)
 
 
 class _TokenCache:
-    """datasets_map analogue: tokenized+dictionary DataFrames per rule key."""
+    """datasets_map analogue: tokenized DataFrames per rule key."""
 
     def __init__(self):
         self._toks: dict[str, DataFrame] = {}
-        self._dicts: dict[str, DataFrame] = {}
 
     def tokens(self, df: DataFrame, id_col: str, rule: Rule) -> DataFrame:
         key = rule.dataset_key
@@ -52,33 +50,19 @@ class _TokenCache:
             ).transform(persist_tracked)
         return self._toks[key]
 
-    def dictionary(self, tokens_df: DataFrame, rule: Rule, n_records: int | None = None) -> DataFrame:
-        key = rule.dataset_key
-        if key not in self._dicts:
-            self._dicts[key] = build_dictionary(
-                tokens_df.select("tokens"), n_records=n_records
-            ).transform(persist_tracked)
-        return self._dicts[key]
-
 
 def _run_rule_self(df: DataFrame, id_col: str, rule: Rule, cache: _TokenCache,
                    weighted: bool) -> DataFrame:
     if rule.sim in ("jac", "cos", "dice"):
         toks = cache.tokens(df, id_col, rule)
-        # dictionary=None: the join's one-job vocabulary probe handles tiny
-        # vocabularies inline (weighted included) and only falls back to the
-        # full distributed dictionary build beyond the bitset cap — the
-        # prebuilt cache dictionary forced that pipeline on every rule
-        # (guide §2.4; the cache still serves the overlap rules)
         return set_similarity_self_join(
             toks, id_col, "tokens", sim=rule.sim, threshold=rule.threshold,
             weighted=weighted,
         ).select("id1", "id2")
     if rule.sim == "overlap":
         toks = cache.tokens(df, id_col, rule)
-        d = cache.dictionary(toks, rule)
         return overlap_self_join(
-            toks, id_col, "tokens", c=max(int(rule.threshold), 1), dictionary=d
+            toks, id_col, "tokens", c=max(int(rule.threshold), 1)
         ).select("id1", "id2")
     if rule.sim == "lev":
         return edit_distance_self_join(

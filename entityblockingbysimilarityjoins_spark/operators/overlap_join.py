@@ -20,46 +20,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.dictionary import encode_tokens
 from .cache import persist_tracked
 from .set_join import (
     _bm_cols,
+    _encode,
     _fan_out,
-    _InlineVocab,
-    _mask_cols,
     _mask_overlap,
+    _Vocab,
     resolve_vocab,
 )
 
 
-def _vocab_and_singletons(df_tokens: DataFrame | None, dictionary: DataFrame | None):
-    """(inline, singleton_tids, dictionary) from ``resolve_vocab``: singleton
-    tids derived in Python from the collected freqs when the probed
-    vocabulary inlines, else None (callers filter freq<2 off the
-    dictionary frame)."""
-    vocab = resolve_vocab(df_tokens, dictionary=dictionary)
-    inline = vocab.inline
-    if inline is not None and inline.freqs is not None:
-        singles = [inline.tid_by_token[t] for t, f in inline.freqs.items() if f < 2]
-        return inline, singles, None
-    return inline, None, vocab.dictionary
-
-
-def _prep(df: DataFrame, id_col: str, tokens_col: str, c: int, dictionary: DataFrame,
-          broadcast_dict: bool, inline: _InlineVocab | None = None) -> DataFrame:
-    slim = df.select(F.col(id_col).alias("rid"), F.col(tokens_col).alias("toks"))
-    if inline is not None:
-        enc = slim.select("rid", inline.encode("toks").alias("tids"))
-    else:
-        enc = encode_tokens(slim, dictionary, id_col="rid", tokens_col="toks",
-                            weight_col=None, broadcast_dict=broadcast_dict,
-                            drop_empty=True).drop("toks")
-    enc = enc.filter(F.size("tids") >= c).withColumn("len", F.size("tids"))
-    if inline is not None:
-        enc = enc.withColumns(
-            {f"__bm{w}": col for w, col in
-             enumerate(_mask_cols(F.col("tids"), inline.n_words))})
-    return enc
+def _singletons(vocab: _Vocab):
+    """Tids of the tokens that occur once: derived in Python from an inline
+    vocabulary's freqs, else a (stid) frame off the distributed dictionary.
+    Such a token cannot produce a pair, so it never enters a prefix."""
+    if vocab.inline is not None:
+        return [tid for tid, f in enumerate(vocab.inline.freqs) if f < 2]
+    return vocab.dictionary.filter(F.col("freq") < 2).select(F.col("tid").alias("stid"))
 
 
 def _prefix(enc: DataFrame, c: int, side: str, singletons,
@@ -82,20 +60,15 @@ def overlap_self_join(
     id_col: str,
     tokens_col: str,
     c: int = 1,
-    dictionary: DataFrame | None = None,
-    broadcast_dict: bool = True,
     count_col: str = "overlap",
 ) -> DataFrame:
     """All pairs (id1 < id2) sharing >= c tokens, with the exact overlap count."""
     if c < 1:
         raise ValueError("overlap threshold c must be >= 1")
-    inline, singles, dictionary = _vocab_and_singletons(
-        df.select(F.col(tokens_col).alias("tokens")), dictionary)
-    singletons = (singles if singles is not None else
-                  dictionary.filter(F.col("freq") < 2).select(F.col("tid").alias("stid")))
-    n_mask = inline.n_words if inline is not None else None
-    enc = _prep(df, id_col, tokens_col, c, dictionary, broadcast_dict,
-                inline=inline).transform(persist_tracked)
+    vocab = resolve_vocab(df.select(F.col(tokens_col).alias("tokens")))
+    singletons = _singletons(vocab)
+    n_mask = vocab.inline.n_words if vocab.inline is not None else None
+    enc = persist_tracked(_encode(df, id_col, tokens_col, vocab, min_len=c))
     l = _fan_out(_prefix(enc, c, "1", singletons, n_mask))
     r = _prefix(enc, c, "2", singletons, n_mask)
     joined = l.join(r, (l["tok"] == r["tok"]) & (F.col("rid1") < F.col("rid2")))
@@ -126,25 +99,17 @@ def overlap_rs_join(
     id_col: str,
     tokens_col: str,
     c: int = 1,
-    dictionary: DataFrame | None = None,
-    broadcast_dict: bool = True,
     count_col: str = "overlap",
 ) -> DataFrame:
     """All (r, s) pairs sharing >= c tokens (ovlpjoin.cc:376-447 contract)."""
     if c < 1:
         raise ValueError("overlap threshold c must be >= 1")
-    union = None
-    if dictionary is None:
-        union = df_r.select(F.col(tokens_col).alias("tokens")).unionAll(
-            df_s.select(F.col(tokens_col).alias("tokens")))
-    inline, singles, dictionary = _vocab_and_singletons(union, dictionary)
-    singletons = (singles if singles is not None else
-                  dictionary.filter(F.col("freq") < 2).select(F.col("tid").alias("stid")))
-    n_mask = inline.n_words if inline is not None else None
-    left = _prep(df_r, id_col, tokens_col, c, dictionary, broadcast_dict,
-                 inline=inline).transform(persist_tracked)
-    right = _prep(df_s, id_col, tokens_col, c, dictionary, broadcast_dict,
-                  inline=inline).transform(persist_tracked)
+    vocab = resolve_vocab(df_r.select(F.col(tokens_col).alias("tokens")).unionAll(
+        df_s.select(F.col(tokens_col).alias("tokens"))))
+    singletons = _singletons(vocab)
+    n_mask = vocab.inline.n_words if vocab.inline is not None else None
+    left = persist_tracked(_encode(df_r, id_col, tokens_col, vocab, min_len=c))
+    right = persist_tracked(_encode(df_s, id_col, tokens_col, vocab, min_len=c))
     l = _prefix(left, c, "1", singletons, n_mask)
     r = _prefix(right, c, "2", singletons, n_mask)
     joined = l.join(r, l["tok"] == r["tok"])

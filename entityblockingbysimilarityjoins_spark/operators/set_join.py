@@ -35,10 +35,11 @@ grouped only on the all-pairs sweep (tiny vocabulary, few distinct sets),
 whose broadcast square runs over DISTINCT sets; on the prefix path grouping
 lost at every set:record ratio measured.
 
-The set-level core lives here too, shared by the top-K and dedup operators:
-``_InlineVocab.encode`` (tiny-vocabulary encode), ``_group_sets`` (group
-identical sets), ``_expand_pairs`` (members back to record pairs) and
-``_ta_score`` (the 4-sim top-K score).
+The set-level core lives here too, shared by the overlap, top-K and dedup
+operators: ``resolve_vocab`` (the one vocabulary entry), ``_encode`` (the one
+record encoder), ``_InlineVocab.encode`` (tiny-vocabulary encode),
+``_group_sets`` (group identical sets), ``_expand_pairs`` (members back to
+record pairs) and ``_ta_score`` (the 4-sim top-K score).
 
 Scale levers (north_rule: "salted, skew-aware inverted-index self-join"):
 - prefixes hold only the rarest tokens (deterministic freq-ordered ids);
@@ -115,9 +116,7 @@ def _min_weighted_overlap(sim: str, t: float, w1: Column, w2: Column) -> Column:
 
 
 #: vocabularies above this never inline as a plan literal (~2 MiB of doubles);
-#: larger vocabs verify through the per-record idf map instead — the caller's
-#: broadcast_dict flag alone used to decide, silently collecting the whole
-#: vocab to the driver (r2 VERDICT "weak" item)
+#: larger vocabs verify through the per-record idf map instead
 MAX_IDF_LITERAL_ENTRIES = 1 << 18
 
 #: all-pairs valve: the distinct-set square is swept directly (broadcast
@@ -147,18 +146,17 @@ class _InlineVocab:
     ``resolve_vocab``'s LIMIT probe; big vocabularies never reach the
     driver."""
 
-    def __init__(self, rows):
-        rows = sorted(rows, key=lambda r: r["tid"])
+    def __init__(self, ranked, idfs: list[float]):
+        """``ranked``: (token, freq) rows in tid order; ``idfs`` by tid."""
         kv = []
-        for r in rows:
-            kv += [F.lit(r["token"]), F.lit(int(r["tid"]))]
+        for tid, r in enumerate(ranked):
+            kv += [F.lit(r["token"]), F.lit(tid)]
         self.token_map = F.create_map(*kv)
-        self.idfs = [float(r["idf"]) for r in rows]
+        self.idfs = list(idfs)
         self.idf_arr = F.lit(self.idfs)
-        self.n = len(rows)
+        self.n = len(ranked)
         self.n_words = max(1, -(-self.n // 64))
-        self.tid_by_token = {r["token"]: int(r["tid"]) for r in rows}
-        self.freqs: dict | None = None  # token -> freq, set by resolve_vocab
+        self.freqs = [int(r["freq"]) for r in ranked]  # by tid
 
     def encode(self, toks: str | Column) -> Column:
         """The sorted tid array of a token-array column — a pure projection
@@ -201,26 +199,13 @@ class _InlineVocab:
         return wo
 
 
-def _inline_vocab(dictionary: DataFrame) -> _InlineVocab | None:
-    """Inline a CALLER-SUPPLIED dictionary when it fits the cap (LIMIT count
-    probe, then a bounded collect). Dictionaries the joins build themselves
-    never come here: ``resolve_vocab`` already knows their size."""
-    cap = MAX_BITSET_WORDS * 64
-    if dictionary.limit(cap + 1).count() > cap:
-        return None
-    rows = dictionary.select("token", "tid", "idf").collect()
-    if not rows:
-        return None
-    return _InlineVocab(rows)
-
-
 class _Vocab:
     """What a join knows about its vocabulary after ``resolve_vocab``.
 
-    Exactly one of ``inline`` / ``dictionary`` drives the encoding (both are
-    set only when a caller-supplied dictionary inlines). ``n_tokens`` is the
-    exact vocabulary size when known, ``n_sets_approx`` the HLL distinct-set
-    estimate that gates the all-pairs sweep."""
+    At most one of ``inline`` / ``dictionary`` drives the encoding (neither
+    when a probe beyond the cap was told not to build). ``n_tokens`` is the
+    exact vocabulary size when either is set, ``n_sets_approx`` the HLL
+    distinct-set estimate that gates the all-pairs sweep."""
 
     def __init__(self, inline: _InlineVocab | None = None,
                  dictionary: DataFrame | None = None,
@@ -237,15 +222,13 @@ class _Vocab:
 def resolve_vocab(
     tokens_df: DataFrame,
     weighted: bool = False,
-    dictionary: DataFrame | None = None,
     build: bool = True,
 ) -> _Vocab:
-    """The one vocabulary pass every join shares (``tokens_df``: a
+    """The one vocabulary pass every token join shares (``tokens_df``: a
     ``tokens`` column).
 
-    A caller-supplied ``dictionary`` is only size-probed for inlining.
-    Otherwise ONE probe job computes the (token, freq) aggregate, the record
-    count and the HLL distinct-set count together:
+    ONE probe job computes the (token, freq) aggregate, the record count and
+    the HLL distinct-set count together:
     - within the cap (MAX_BITSET_WORDS*64 tokens) the collected rows become
       the inline vocabulary — tids assigned in Python by the dictionary's
       (freq ASC, token ASC) order; IDFs ``log10(N/freq)`` are evaluated by
@@ -263,8 +246,6 @@ def resolve_vocab(
     which the LIMIT reads in order: the limit can only ever cut token rows,
     so a refusing probe still returns both counts (and the probe is one
     result job however many partitions the aggregate has)."""
-    if dictionary is not None:
-        return _Vocab(inline=_inline_vocab(dictionary), dictionary=dictionary)
     cap = MAX_BITSET_WORDS * 64
     freqs = token_freqs(tokens_df)
     counts = tokens_df.agg(
@@ -286,10 +267,8 @@ def resolve_vocab(
             idfs = spark.range(1).select(F.array(*idf_exprs).alias("a")).first()["a"]
         else:
             idfs = [0.0] * len(ranked)  # no unweighted code path reads them
-        inline = _InlineVocab([{"token": r["token"], "tid": i, "idf": idfs[i]}
-                               for i, r in enumerate(ranked)])
-        inline.freqs = {r["token"]: r["freq"] for r in toks}
-        return _Vocab(inline=inline, n_records=n_records, n_sets_approx=n_sets)
+        return _Vocab(inline=_InlineVocab(ranked, idfs), n_records=n_records,
+                      n_sets_approx=n_sets)
     vocab = _Vocab(n_records=n_records, n_sets_approx=n_sets)
     if build:
         vocab.dictionary, vocab.n_tokens = rank_vocab(freqs, n_records)
@@ -343,85 +322,74 @@ def _fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(2 * df.sparkSession.sparkContext.defaultParallelism)
 
 
-def _idf_literal(vocab: _Vocab, weighted: bool, broadcast_dict: bool) -> Column | None:
-    """Global tid->idf lookup as an array literal (tids are dense 0..V-1),
-    or None when the vocabulary exceeds MAX_IDF_LITERAL_ENTRIES. The size
-    comes from ``resolve_vocab``; only a caller-supplied dictionary is
-    LIMIT-probed."""
-    if not (weighted and broadcast_dict):
-        return None
-    cap = MAX_IDF_LITERAL_ENTRIES
-    n = vocab.n_tokens
-    if n is None:
-        n = vocab.dictionary.limit(cap + 1).count()
-    if n > cap:
-        log.info(
-            "set_join: vocabulary exceeds %d entries — weighted verification "
-            "falls back to the per-record idf map", cap,
-        )
-        return None
-    rows = sorted(vocab.dictionary.select("tid", "idf").collect(),
-                  key=lambda r: r["tid"])
-    return F.lit([float(r["idf"]) for r in rows])
+def _encode(
+    df: DataFrame,
+    id_col: str,
+    tokens_col: str,
+    vocab: _Vocab,
+    weighted: bool = False,
+    min_len: int = 1,
+) -> DataFrame:
+    """The one record encoder of every token join: (rid, tids, len[, __bm*]
+    [, idfs, wt]) for the records with at least ``min_len`` known tokens
+    (DROP_EMPTY at ``min_len=1``, the overlap join's short-record drop at
+    ``c``). ``tids`` is sorted ascending, i.e. rarest-first. An inline
+    vocabulary encodes by projection and adds the bitmask words; the
+    distributed dictionary encodes through ``encode_tokens``. Weighted
+    records carry the idf array aligned with ``tids`` and its sum ``wt``.
+
+    Ordering/tie-breaks ride directly on ``rid`` — a deterministic key, so a
+    lost-and-recomputed cache partition can never re-key records."""
+    slim = df.select(F.col(id_col).alias("rid"), F.col(tokens_col).alias("toks"))
+    inline = vocab.inline
+    if inline is not None:
+        enc = slim.select("rid", inline.encode("toks").alias("tids"))
+    else:
+        enc = encode_tokens(slim, vocab.dictionary, id_col="rid", tokens_col="toks",
+                            idfs_col="idfs" if weighted else None)
+    enc = enc.filter(F.size("tids") >= min_len).withColumn("len", F.size("tids"))
+    if inline is not None:
+        enc = enc.withColumns(
+            {f"__bm{w}": c for w, c in enumerate(_mask_cols(F.col("tids"), inline.n_words))})
+        if weighted:
+            enc = enc.withColumn(
+                "idfs", F.transform("tids", lambda t: F.get(inline.idf_arr, t)))
+    if weighted:
+        enc = enc.withColumn(
+            "wt", F.aggregate("idfs", F.lit(0.0), lambda acc, x: acc + x))
+    return enc
 
 
 def _prepare(
     df: DataFrame,
     id_col: str,
     tokens_col: str,
-    dictionary: DataFrame,
+    vocab: _Vocab,
     weighted: bool,
-    broadcast_dict: bool,
     need_idf_map: bool = False,
-    inline: _InlineVocab | None = None,
     need_suffixs: bool = True,
 ) -> DataFrame:
-    """(rid, tids, len[, __bm*, wt, idf_map, suffixs]) with empties dropped
-    (DROP_EMPTY); an inline vocabulary also adds the bitmask words.
+    """The persisted ``_encode`` output of a set join, plus the weighted
+    extras (``idf_map``, ``suffixs``; ``idfs`` is dropped).
 
     ``need_suffixs=False`` skips the reverse prefix-sum scan (and keeps the
     arrays out of every downstream exchange) when the caller knows no
     weight-based prefix test will run — the all-pairs sweep verifies every
     pair directly from the masks.
 
-    Ordering/tie-breaks ride directly on ``rid`` — a deterministic key, so a
-    lost-and-recomputed cache partition can never re-key records (the
-    monotonically_increasing_id surrogate used previously was only stable
-    while its persist() held). The weighted extras
-    are pure projections over the (tids, idfs) arrays the encode step already
-    carries — no additional shuffle:
+    The weighted extras are pure projections over the (tids, idfs) arrays
+    the encode step already carries — no additional shuffle:
     - weighted verification sums idf over the int-array intersection by
       indexing a GLOBAL tid->idf literal array (idf is a pure function of
       tid): array ``get`` is O(1). The alternatives both measured badly on
       dense corpora: a per-record tid->idf map (element_at on MapData is a
       linear scan -> O(|inter| x |map|) per candidate, 4x slower) and
       (tid, idf) struct arrays (array_intersect falls off the specialized
-      atomic-type fast path into a nested loop, 10x slower). When the
-      dictionary is too large to inline (broadcast_dict=False), the
-      per-record map path is used instead;
+      atomic-type fast path into a nested loop, 10x slower). Only a
+      vocabulary beyond MAX_IDF_LITERAL_ENTRIES takes the per-record map;
     - ``suffixs``: suffixs[p] = sum(idfs[p:]), a reverse prefix-sum scan
       (aggregate HOF), feeding the weight-based prefix membership tests."""
-    slim = df.select(F.col(id_col).alias("rid"), F.col(tokens_col).alias("toks"))
-    if inline is not None:
-        enc = slim.select("rid", inline.encode("toks").alias("tids"))
-        enc = enc.filter(F.size("tids") > 0).withColumn("len", F.size("tids"))
-        enc = enc.withColumns(
-            {f"__bm{w}": c for w, c in enumerate(_mask_cols(F.col("tids"), inline.n_words))})
-        if weighted:
-            idf_arr = inline.idf_arr
-            enc = enc.withColumn(
-                "idfs", F.transform("tids", lambda t: F.get(idf_arr, t)))
-            enc = enc.withColumn(
-                "wt", F.aggregate("idfs", F.lit(0.0), lambda acc, x: acc + x))
-    else:
-        # drop_empty: empty token sets never reach the groupBy, so the encode
-        # join-back (and its exchange) is skipped entirely
-        enc = encode_tokens(
-            slim, dictionary, id_col="rid", tokens_col="toks",
-            weight_col="wt" if weighted else None, broadcast_dict=broadcast_dict,
-            idfs_col="idfs" if weighted else None, drop_empty=True,
-        ).drop("toks")
-        enc = enc.withColumn("len", F.size("tids"))
+    enc = _encode(df, id_col, tokens_col, vocab, weighted)
     if weighted:
         if need_idf_map:
             enc = enc.withColumn("idf_map", F.map_from_arrays("tids", "idfs"))
@@ -602,22 +570,25 @@ def _fused_verify(joined: DataFrame, sim: str, threshold: float, weighted: bool,
     return out.dropDuplicates(["id1", "id2"])
 
 
-def _join_vocab(
-    tokens_df: DataFrame,
-    weighted: bool,
-    dictionary: DataFrame | None,
-    broadcast_dict: bool,
-) -> tuple[_Vocab, Column | None]:
+def _join_vocab(tokens_df: DataFrame, weighted: bool) -> tuple[_Vocab, Column | None]:
     """(vocab, idf_arr) for a set join: the resolved vocabulary and, for
-    weighted joins, the global tid->idf literal when the vocabulary fits it
-    (chosen by VOCAB SIZE, not trust in the caller's flag: oversized
-    vocabularies never collect to the driver)."""
-    if weighted and dictionary is not None:
-        dictionary = persist_tracked(dictionary)  # probed, collected, joined
-    vocab = resolve_vocab(tokens_df, weighted, dictionary)
+    weighted joins, the global tid->idf lookup as an array literal (tids are
+    dense 0..V-1) — None when the vocabulary exceeds MAX_IDF_LITERAL_ENTRIES:
+    oversized vocabularies never collect to the driver."""
+    vocab = resolve_vocab(tokens_df, weighted)
+    if not weighted:
+        return vocab, None
     if vocab.inline is not None:
-        return vocab, vocab.inline.idf_arr if weighted else None
-    return vocab, _idf_literal(vocab, weighted, broadcast_dict)
+        return vocab, vocab.inline.idf_arr
+    if vocab.n_tokens > MAX_IDF_LITERAL_ENTRIES:
+        log.info(
+            "set_join: vocabulary exceeds %d entries — weighted verification "
+            "falls back to the per-record idf map", MAX_IDF_LITERAL_ENTRIES,
+        )
+        return vocab, None
+    rows = sorted(vocab.dictionary.select("tid", "idf").collect(),
+                  key=lambda r: r["tid"])
+    return vocab, F.lit([float(r["idf"]) for r in rows])
 
 
 def _group_sets(df: DataFrame, key: str,
@@ -713,8 +684,6 @@ def _self_join_parts(
     sim: str,
     threshold: float,
     weighted: bool = False,
-    dictionary: DataFrame | None = None,
-    broadcast_dict: bool = True,
     sim_col: str = "sim",
     ta_col: str | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
@@ -728,7 +697,7 @@ def _self_join_parts(
     path the join runs over records: ``verified`` holds record pairs and
     ``groups`` is None."""
     vocab, idf_arr = _join_vocab(df.select(F.col(tokens_col).alias("tokens")),
-                                 weighted, dictionary, broadcast_dict)
+                                 weighted)
     inline = vocab.inline
     need_map = weighted and idf_arr is None
     n_mask = inline.n_words if inline is not None else None
@@ -744,11 +713,10 @@ def _self_join_parts(
     # the cap take the prefix path. The decision is known before any record
     # work, so the sweep skips the weighted suffix scan.
     use_sweep = (inline is not None
-                 and (not weighted or ta_col is None)  # TA score needs len cols
                  and vocab.n_sets_approx is not None
                  and vocab.n_sets_approx <= MAX_ALLPAIRS_SETS)
-    enc = _prepare(df, id_col, tokens_col, vocab.dictionary, weighted, broadcast_dict,
-                   need_idf_map=need_map, inline=inline, need_suffixs=not use_sweep)
+    enc = _prepare(df, id_col, tokens_col, vocab, weighted,
+                   need_idf_map=need_map, need_suffixs=not use_sweep)
     if use_sweep:
         j, groups, _ = _sweep(enc, None, sim, threshold, weighted, inline, sim_col)
         extra = []
@@ -792,8 +760,6 @@ def set_similarity_self_join(
     sim: str = "jac",
     threshold: float = 0.8,
     weighted: bool = False,
-    dictionary: DataFrame | None = None,
-    broadcast_dict: bool = True,
     sim_col: str = "sim",
 ) -> DataFrame:
     """All pairs (id1 < id2) with sim(tokens) >= threshold. See module doc.
@@ -806,8 +772,7 @@ def set_similarity_self_join(
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
     verified, groups = _self_join_parts(
-        df, id_col, tokens_col, sim, threshold, weighted, dictionary,
-        broadcast_dict, sim_col)
+        df, id_col, tokens_col, sim, threshold, weighted, sim_col)
     return _expand_pairs(verified, groups, sim_col, 1.0)
 
 
@@ -819,8 +784,6 @@ def set_similarity_rs_join(
     sim: str = "jac",
     threshold: float = 0.8,
     weighted: bool = False,
-    dictionary: DataFrame | None = None,
-    broadcast_dict: bool = True,
     sim_col: str = "sim",
 ) -> DataFrame:
     """All (r, s) pairs with sim >= threshold; dictionary/IDF over R ∪ S.
@@ -829,8 +792,8 @@ def set_similarity_rs_join(
     treat the R side as smaller)."""
     union = df_r.select(F.col(tokens_col).alias("tokens")).unionAll(
         df_s.select(F.col(tokens_col).alias("tokens")))
-    vocab, idf_arr = _join_vocab(union, weighted, dictionary, broadcast_dict)
-    inline, dictionary = vocab.inline, vocab.dictionary
+    vocab, idf_arr = _join_vocab(union, weighted)
+    inline = vocab.inline
     need_map = weighted and idf_arr is None
     n_mask = inline.n_words if inline is not None else None
     # RS flavor of the all-pairs sweep (same valve as the self join): the
@@ -839,10 +802,10 @@ def set_similarity_rs_join(
     # joins AND their dedup exchange disappear.
     use_sweep = (inline is not None and vocab.n_sets_approx is not None
                  and vocab.n_sets_approx <= MAX_ALLPAIRS_SETS)
-    left = _prepare(df_r, id_col, tokens_col, dictionary, weighted, broadcast_dict,
-                    need_idf_map=need_map, inline=inline, need_suffixs=not use_sweep)
-    right = _prepare(df_s, id_col, tokens_col, dictionary, weighted, broadcast_dict,
-                     need_idf_map=need_map, inline=inline, need_suffixs=not use_sweep)
+    left = _prepare(df_r, id_col, tokens_col, vocab, weighted,
+                    need_idf_map=need_map, need_suffixs=not use_sweep)
+    right = _prepare(df_s, id_col, tokens_col, vocab, weighted,
+                     need_idf_map=need_map, need_suffixs=not use_sweep)
     if use_sweep:
         j, gl, gr = _sweep(left, right, sim, threshold, weighted, inline, sim_col)
         m1 = gl.select(F.col("rid").alias("rid1"), F.col("members").alias("mm1"))

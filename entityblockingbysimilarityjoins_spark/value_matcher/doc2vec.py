@@ -147,7 +147,7 @@ def doc2vec_value_vectors(
     Valve-guarded (guide §5: the driver does no unbounded data work): the
     collect is preceded by a LIMIT probe and refuses vocabularies beyond
     MAX_VALUE_VOCAB — the same probe-then-refuse pattern as
-    ``set_join._idf_literal`` — instead of silently OOMing the driver when
+    ``set_join.resolve_vocab`` — instead of silently OOMing the driver when
     pointed at a high-cardinality attribute."""
     spark = values_df.sparkSession
     values = [r[0] for r in _collect_value_vocab(values_df, value_col)]

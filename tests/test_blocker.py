@@ -49,6 +49,19 @@ def test_block_self_union_and_rules_passed(spark):
     # pair (0,5): anm(100,100)=1 pass only (title "" never joins)
     assert res[(0, 5)] == 1
     assert (2, 5) not in res  # nothing passes
+    # one more rule, overlap >= c: it adds exactly one to every pair whose
+    # title token sets share at least c tokens (brute force), to no other
+    c = 2
+    toks = {rid: set(title.split()) for rid, title, _, _ in ROWS}
+    want = {p for p in itertools.combinations(sorted(toks), 2)
+            if len(toks[p[0]] & toks[p[1]]) >= c}
+    assert want  # (0,1), (0,2), (1,2), (3,4)
+    with_ovl = {(r["id1"], r["id2"]): r["rules_passed"] for r in block_self(
+        _df(spark), "rid", rules + [Rule("title", "overlap", "dlm", None, float(c))]
+    ).collect()}
+    assert want <= set(with_ovl)
+    assert {p: n - res.get(p, 0) for p, n in with_ovl.items()} == {
+        p: int(p in want) for p in with_ovl}
 
 
 def test_degenerate_lev_skipped(spark):

@@ -16,7 +16,7 @@ ROWS = [
     (0, "a b c"),
     (1, "b c d"),
     (2, "c d e"),
-    (3, ""),  # empty token set must survive encoding
+    (3, ""),  # empty token set: no encoding
     (4, "e e a"),
 ]
 
@@ -37,15 +37,17 @@ def test_dictionary_freq_order_and_idf(spark):
 def test_encode_rarest_first_and_weights(spark):
     df = _df(spark)
     d = build_dictionary(df)
-    enc = encode_tokens(df, d).orderBy("rid").collect()
+    enc = {r["rid"]: r for r in encode_tokens(df, d, idfs_col="idfs").collect()}
     tid = {r["token"]: r["tid"] for r in d.collect()}
     idf = {r["token"]: r["idf"] for r in d.collect()}
     assert enc[0]["tids"] == sorted([tid["a"], tid["b"], tid["c"]])
     # sorted ascending == rarest-first: row0 prefix token is 'a' (rarest)
     assert enc[0]["tids"][0] == tid["a"]
-    assert enc[3]["tids"] == [] and enc[3]["wt"] == 0.0
+    assert 3 not in enc  # the empty token set has no encoding
+    # idfs align with tids; their sum is the record weight the joins use
+    assert enc[4]["idfs"] == [idf[t] for t in sorted("ae", key=tid.get)]
     want = idf["e"] + idf["a"]  # row4 token set {a, e}
-    assert abs(enc[4]["wt"] - want) < 1e-12
+    assert abs(sum(enc[4]["idfs"]) - want) < 1e-12
 
 
 def test_dictionary_deterministic_across_partitionings(spark):

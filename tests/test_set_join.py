@@ -128,25 +128,23 @@ def test_weighted_jaccard_matches_bruteforce(spark):
 
 
 def test_weighted_map_path_equals_literal_path(spark, monkeypatch):
-    # broadcast_dict=False exercises the per-record idf_map verification;
-    # results must be identical to the global-literal fast path
+    # vocab-size gate: with the vocabulary forced onto the dictionary path, a
+    # tiny literal cap must force the per-record idf_map verification (no
+    # driver collect of the vocabulary) and still produce the results of the
+    # inline literal path
+    import entityblockingbysimilarityjoins_spark.operators.set_join as SJ
+
     rows = _corpus(seed=9, n=40)
     df = spark.createDataFrame(rows, ["rid", "s"]).withColumn("tokens", tokens_dlm("s"))
     fast = {(r["id1"], r["id2"]): round(r["sim"], 9) for r in
             set_similarity_self_join(df, "rid", "tokens", "jac", 0.6, weighted=True).collect()}
-    slow = {(r["id1"], r["id2"]): round(r["sim"], 9) for r in
-            set_similarity_self_join(df, "rid", "tokens", "jac", 0.6, weighted=True,
-                                     broadcast_dict=False).collect()}
-    assert fast == slow and len(fast) > 0
-    # vocab-size gate: a tiny literal cap must force the map path (no driver
-    # collect of the vocabulary) and still produce identical results
-    import entityblockingbysimilarityjoins_spark.operators.set_join as SJ
-
+    monkeypatch.setattr(SJ, "MAX_BITSET_WORDS", 0)
     monkeypatch.setattr(SJ, "MAX_IDF_LITERAL_ENTRIES", 4)
-    gated = {(r["id1"], r["id2"]): round(r["sim"], 9) for r in
-             set_similarity_self_join(df, "rid", "tokens", "jac", 0.6, weighted=True).collect()}
+    gated_df = set_similarity_self_join(df, "rid", "tokens", "jac", 0.6, weighted=True)
+    assert "idf_map" in gated_df._jdf.queryExecution().optimizedPlan().toString()
+    gated = {(r["id1"], r["id2"]): round(r["sim"], 9) for r in gated_df.collect()}
     monkeypatch.undo()
-    assert fast == gated
+    assert fast == gated and len(fast) > 0
 
 
 def test_empty_sets_never_join(spark):
