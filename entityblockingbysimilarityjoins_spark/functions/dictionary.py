@@ -14,18 +14,12 @@ blocking keys are reproducible across runs and cluster sizes.
 Scale notes:
 - the token-frequency aggregate (``token_freqs``) is one explode +
   groupBy(token) shuffle. Set joins define it once, in the vocabulary probe
-  of ``operators.set_join.resolve_vocab``, and hand that aggregate and the
-  record count the probe also returns to ``rank_vocab``: no recount, and
-  the finished dictionary is never probed again (``rank_vocab`` returns its
-  size). Spark evaluates the aggregate a second time for the rank; caching
-  it would cost every inline-vocabulary join a job.
-- the rank is distributed and two-pass, with no global window: range-partition
-  the vocabulary on (freq, token), sort inside each partition, number the
-  rows in that order, then shift each partition by the sizes of the ones
-  before it. Only the P-row partition-size table (P = number of range
-  partitions) reaches the driver, never the vocabulary. The rank is a pure
-  function of the unique total order (freq, token), so tids are identical
-  wherever the range boundaries land.
+  of ``operators.set_join.resolve_vocab``, which collects it whole together
+  with the record count: no recount, and no second pass over the aggregate.
+- the rank is not distributed: the driver sorts the collected (token, freq)
+  rows (``rank_tokens``) and ``dictionary_frame`` turns the ranked list into
+  the dictionary. The driver therefore holds the whole vocabulary, which
+  costs no more than the broadcast encode below already does.
 - encoding joins the (exploded) corpus with the dictionary, which is always
   broadcast: every executor holds the whole vocabulary. A vocabulary beyond
   what a broadcast can hold is an open limit (ROADMAP).
@@ -33,9 +27,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ..operators.cache import persist_tracked
 
 
 def token_freqs(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
@@ -49,39 +43,33 @@ def token_freqs(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     )
 
 
-def rank_vocab(freqs: DataFrame, n_records: int) -> tuple[DataFrame, int]:
-    """(dictionary, V) from a (token, freq) aggregate: tid 0..V-1 ordered
-    (freq ASC, token ASC), idf = log10(n_records/freq).
+def rank_tokens(rows) -> list[tuple[str, int]]:
+    """(token, freq) pairs in tid order, (freq ASC, token ASC), from rows
+    whose first two fields are (token, freq). Python orders strings by code
+    point and Spark by UTF-8 bytes; the two orders agree, so this is the
+    order Spark would sort."""
+    return [(t, f) for f, t in sorted((r[1], r[0]) for r in rows)]
 
-    One action: it materializes the persisted range-partitioned vocabulary
-    and collects the P partition sizes. The row index inside a sorted
-    partition is the low 33 bits of ``monotonically_increasing_id`` (its
-    high bits are the partition id), so the dictionary itself is a
-    projection over the cached partitions: no window, no exchange."""
-    sc = freqs.sparkSession.sparkContext
-    n_parts = max(sc.defaultParallelism, 1)
-    parts = (
-        freqs.repartitionByRange(n_parts, F.asc("freq"), F.asc("token"))
-        .sortWithinPartitions("freq", "token")
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .transform(persist_tracked)
-    )
-    pid = F.shiftright("__mid", 33).cast("int")
-    sizes = dict(parts.groupBy(pid.alias("__pid")).count().collect())
-    offsets, total = [], 0
-    for p in range(max(sizes, default=-1) + 1):
-        offsets.append(total)
-        total += sizes.get(p, 0)
-    if not offsets:
-        offsets = [0]
-    idx = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
-    dictionary = parts.select(
-        "token",
-        (F.get(F.lit(offsets), pid) + idx).cast("int").alias("tid"),
-        "freq",
-        F.log10(F.lit(float(n_records)) / F.col("freq")).alias("idf"),
-    )
-    return dictionary, total
+
+def dictionary_frame(spark: SparkSession, ranked: list[tuple[str, int]],
+                     n_records: int) -> DataFrame:
+    """(token, tid, freq, idf) over a ranked list: tid is the list index and
+    idf = log10(n_records/freq), evaluated by the JVM (Python's libm log10
+    differs by 1 ulp on real corpus values).
+
+    The list crosses as one Arrow table: a list of tuples would become a
+    pickled RDD that Python workers re-serialize each time the broadcast
+    encode reads it. The lazy local checkpoint takes the rows out of the
+    plan, where Spark keeps a small Arrow table as a local relation; on a
+    118,818-token title join (local[4], 4 vCPUs) that relation cost about
+    1 s more wall time per join."""
+    table = pa.table({
+        "token": pa.array([t for t, _ in ranked], pa.string()),
+        "tid": pa.array(range(len(ranked)), pa.int32()),
+        "freq": pa.array([f for _, f in ranked], pa.int64()),
+    })
+    return spark.createDataFrame(table).localCheckpoint(eager=False).withColumn(
+        "idf", F.log10(F.lit(float(n_records)) / F.col("freq")))
 
 
 def build_dictionary(df: DataFrame, tokens_col: str = "tokens", n_records: int | None = None) -> DataFrame:
@@ -92,7 +80,8 @@ def build_dictionary(df: DataFrame, tokens_col: str = "tokens", n_records: int |
     """
     if n_records is None:
         n_records = df.count()
-    return rank_vocab(token_freqs(df, tokens_col), n_records)[0]
+    ranked = rank_tokens(token_freqs(df, tokens_col).collect())
+    return dictionary_frame(df.sparkSession, ranked, n_records)
 
 
 def encode_tokens(

@@ -140,6 +140,11 @@ class RandomForestMatcher:
             feature_names: list[str] | None = None) -> "RandomForestMatcher":
         X = np.nan_to_num(np.asarray(X, dtype=np.float64), nan=0.0)  # impute 0.0
         y = np.asarray(y, dtype=np.int64)
+        # canonical row order (by y, then the features): the bootstrap draws
+        # row indices, so the forest would otherwise depend on the order in
+        # which the training frame's plan happened to emit its rows
+        order = np.lexsort(np.column_stack([X, y]).T)
+        X, y = X[order], y[order]
         if feature_names is not None:
             self.feature_names = list(feature_names)
         # class_weight='balanced'

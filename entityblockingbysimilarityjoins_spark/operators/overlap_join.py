@@ -26,33 +26,20 @@ from .set_join import (
     _encode,
     _fan_out,
     _mask_overlap,
-    _Vocab,
     resolve_vocab,
 )
 
 
-def _singletons(vocab: _Vocab):
-    """Tids of the tokens that occur once: derived in Python from an inline
-    vocabulary's freqs, else a (stid) frame off the distributed dictionary.
-    Such a token cannot produce a pair, so it never enters a prefix."""
-    if vocab.inline is not None:
-        return [tid for tid, f in enumerate(vocab.inline.freqs) if f < 2]
-    return vocab.dictionary.filter(F.col("freq") < 2).select(F.col("tid").alias("stid"))
-
-
-def _prefix(enc: DataFrame, c: int, side: str, singletons,
+def _prefix(enc: DataFrame, c: int, side: str, n_singletons: int,
             n_mask_words: int | None = None) -> DataFrame:
-    e = enc.select(
+    """The ``len - c + 1`` rarest tokens of each record, less the tokens
+    that occur once: they are tids ``[0, n_singletons)`` (see ``_Vocab``),
+    and such a token cannot produce a pair."""
+    return enc.select(
         F.col("rid").alias(f"rid{side}"),
         *_bm_cols(n_mask_words, side),
         F.explode(F.slice("tids", 1, F.col("len") - F.lit(c - 1))).alias("tok"),
-    )
-    if isinstance(singletons, list):
-        if singletons:  # Python-derived singleton tids -> codegen NOT IN set
-            e = e.filter(~F.col("tok").isin(singletons))
-    elif singletons is not None:
-        e = e.join(F.broadcast(singletons), e["tok"] == singletons["stid"], "left_anti")
-    return e
+    ).filter(F.col("tok") >= n_singletons)
 
 
 def overlap_self_join(
@@ -66,11 +53,10 @@ def overlap_self_join(
     if c < 1:
         raise ValueError("overlap threshold c must be >= 1")
     vocab = resolve_vocab(df.select(F.col(tokens_col).alias("tokens")))
-    singletons = _singletons(vocab)
     n_mask = vocab.inline.n_words if vocab.inline is not None else None
     enc = persist_tracked(_encode(df, id_col, tokens_col, vocab, min_len=c))
-    l = _fan_out(_prefix(enc, c, "1", singletons, n_mask))
-    r = _prefix(enc, c, "2", singletons, n_mask)
+    l = _fan_out(_prefix(enc, c, "1", vocab.n_singletons, n_mask))
+    r = _prefix(enc, c, "2", vocab.n_singletons, n_mask)
     joined = l.join(r, (l["tok"] == r["tok"]) & (F.col("rid1") < F.col("rid2")))
     if n_mask:
         # fused bitset verify: the mask words ride the prefix entries, the
@@ -106,12 +92,11 @@ def overlap_rs_join(
         raise ValueError("overlap threshold c must be >= 1")
     vocab = resolve_vocab(df_r.select(F.col(tokens_col).alias("tokens")).unionAll(
         df_s.select(F.col(tokens_col).alias("tokens"))))
-    singletons = _singletons(vocab)
     n_mask = vocab.inline.n_words if vocab.inline is not None else None
     left = persist_tracked(_encode(df_r, id_col, tokens_col, vocab, min_len=c))
     right = persist_tracked(_encode(df_s, id_col, tokens_col, vocab, min_len=c))
-    l = _prefix(left, c, "1", singletons, n_mask)
-    r = _prefix(right, c, "2", singletons, n_mask)
+    l = _prefix(left, c, "1", vocab.n_singletons, n_mask)
+    r = _prefix(right, c, "2", vocab.n_singletons, n_mask)
     joined = l.join(r, l["tok"] == r["tok"])
     if n_mask:
         # fused bitset verify — see overlap_self_join

@@ -11,10 +11,11 @@ after one equi-join fused into a single codegen stage:
 
 1. resolve the vocabulary in ONE pass (``resolve_vocab``): a single probe
    job yields the token-frequency aggregate, the record count and the HLL
-   distinct-set count; vocabularies of at most 256 tokens inline as plan
-   literals, larger ones are ranked into the distributed dictionary from
-   that same aggregate and count (``functions.dictionary``) — tokens encode
-   as ints ordered rarest-first either way;
+   distinct-set count; the driver ranks the collected aggregate
+   (``functions.dictionary``), so tokens encode as ints ordered
+   rarest-first. Vocabularies of at most 256 tokens inline as plan
+   literals, larger ones encode through the broadcast dictionary built
+   from the same ranked list;
 2. explode two prefixes per record: the **probe** prefix
    (``|x| - ceil(f(t)|x|) + 1`` rarest tokens) and, within it, the
    **indexing** prefix (PPJoin: on the smaller side of any qualifying pair
@@ -56,7 +57,12 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.dictionary import encode_tokens, rank_vocab, token_freqs
+from ..functions.dictionary import (
+    dictionary_frame,
+    encode_tokens,
+    rank_tokens,
+    token_freqs,
+)
 from .cache import persist_tracked
 
 log = logging.getLogger(__name__)
@@ -142,21 +148,21 @@ class _InlineVocab:
     literal array. When the probed vocabulary fits MAX_BITSET_WORDS*64
     entries, record encoding becomes a pure projection (map lookup + sort)
     instead of explode + dictionary join + groupBy — removing two exchanges
-    from every join's prepare stage (guide §2.4). The collect is bounded by
-    ``resolve_vocab``'s LIMIT probe; big vocabularies never reach the
-    driver."""
+    from every join's prepare stage (guide §2.4). Only the encoding differs
+    from a larger vocabulary: both are ranked on the driver from the same
+    probe."""
 
-    def __init__(self, ranked, idfs: list[float]):
-        """``ranked``: (token, freq) rows in tid order; ``idfs`` by tid."""
+    def __init__(self, ranked: list[tuple[str, int]], idfs: list[float] | None):
+        """``ranked``: (token, freq) pairs in tid order; ``idfs`` by tid, or
+        None for an unweighted join (no unweighted code path reads them)."""
         kv = []
-        for tid, r in enumerate(ranked):
-            kv += [F.lit(r["token"]), F.lit(tid)]
+        for tid, (token, _) in enumerate(ranked):
+            kv += [F.lit(token), F.lit(tid)]
         self.token_map = F.create_map(*kv)
-        self.idfs = list(idfs)
-        self.idf_arr = F.lit(self.idfs)
+        self.idfs = idfs
+        self.idf_arr = None if idfs is None else F.lit(idfs)
         self.n = len(ranked)
         self.n_words = max(1, -(-self.n // 64))
-        self.freqs = [int(r["freq"]) for r in ranked]  # by tid
 
     def encode(self, toks: str | Column) -> Column:
         """The sorted tid array of a token-array column — a pure projection
@@ -202,21 +208,28 @@ class _InlineVocab:
 class _Vocab:
     """What a join knows about its vocabulary after ``resolve_vocab``.
 
-    At most one of ``inline`` / ``dictionary`` drives the encoding (neither
-    when a probe beyond the cap was told not to build). ``n_tokens`` is the
-    exact vocabulary size when either is set, ``n_sets_approx`` the HLL
-    distinct-set estimate that gates the all-pairs sweep."""
+    ``ranked`` is the (token, freq) list in tid order (None when a probe
+    beyond the cap was told not to build), with its size ``n_tokens``;
+    ``n_sets_approx`` is the HLL distinct-set estimate that gates the
+    all-pairs sweep. Tids run (freq ASC, token ASC) and every freq is at
+    least 1, so the tokens that occur once are exactly tids
+    ``[0, n_singletons)``. ``idfs`` (by tid) is set for weighted joins.
+    At most one of ``inline`` / ``dictionary`` drives the encoding: the
+    inline projection up to the cap, the broadcast dictionary beyond it."""
 
-    def __init__(self, inline: _InlineVocab | None = None,
-                 dictionary: DataFrame | None = None,
-                 n_records: int | None = None,
-                 n_sets_approx: int | None = None,
-                 n_tokens: int | None = None):
-        self.inline = inline
-        self.dictionary = dictionary
+    def __init__(self, n_records: int, n_sets_approx: int,
+                 ranked: list[tuple[str, int]] | None = None,
+                 idfs: list[float] | None = None,
+                 dictionary: DataFrame | None = None):
         self.n_records = n_records
         self.n_sets_approx = n_sets_approx
-        self.n_tokens = inline.n if inline is not None else n_tokens
+        self.ranked = ranked
+        self.idfs = idfs
+        self.dictionary = dictionary
+        self.n_tokens = None if ranked is None else len(ranked)
+        self.n_singletons = sum(1 for _, f in ranked or () if f < 2)
+        self.inline = (_InlineVocab(ranked, idfs)
+                       if ranked and dictionary is None else None)
 
 
 def resolve_vocab(
@@ -228,51 +241,47 @@ def resolve_vocab(
     ``tokens`` column).
 
     ONE probe job computes the (token, freq) aggregate, the record count and
-    the HLL distinct-set count together:
-    - within the cap (MAX_BITSET_WORDS*64 tokens) the collected rows become
-      the inline vocabulary — tids assigned in Python by the dictionary's
-      (freq ASC, token ASC) order; IDFs ``log10(N/freq)`` are evaluated by
-      the JVM (Python's libm log10 differs by 1 ulp on real corpus values)
-      for weighted joins, zero otherwise;
-    - beyond it, with ``build``, the same aggregate and record count feed
-      ``rank_vocab``: no recount, no re-probe of the finished dictionary,
-      and the exact vocabulary size comes back with it. The aggregate is
-      not persisted for this second read: a cached aggregate costs the
-      inline path one more job (AQE materializes a cached relation as its
-      own query stage) and measured no cheaper on the dictionary path,
-      where Spark recomputes the explode + partial aggregate once.
+    the HLL distinct-set count together. With ``build`` the probe collects
+    the whole aggregate and the driver ranks it (``rank_tokens``), so the
+    driver holds every vocabulary — no more than the broadcast encode of a
+    large vocabulary already brings to it. Within the cap
+    (MAX_BITSET_WORDS*64 tokens) the ranked list becomes the inline
+    vocabulary; beyond it, the broadcast dictionary (``dictionary_frame``)
+    over the same list. Weighted joins collect the IDFs ``log10(N/freq)``
+    from a projection over that frame, so they are the JVM's at every size.
 
-    The count row is unioned FIRST and the union coalesced to one partition,
-    which the LIMIT reads in order: the limit can only ever cut token rows,
-    so a refusing probe still returns both counts (and the probe is one
-    result job however many partitions the aggregate has)."""
+    Without ``build`` the probe is LIMITed to cap + 2 rows and a vocabulary
+    beyond the cap is refused (no ranked list); its callers only ever use
+    the inline vocabulary. The count row is unioned FIRST and the union
+    coalesced to one partition, which the LIMIT reads in order: the limit
+    can only ever cut token rows, so a refusing probe still returns both
+    counts (and the probe is one result job however many partitions the
+    aggregate has)."""
     cap = MAX_BITSET_WORDS * 64
-    freqs = token_freqs(tokens_df)
     counts = tokens_df.agg(
         F.count("*").alias("freq"),
         F.approx_count_distinct("tokens").alias("n_sets"),
     ).select(F.lit(None).cast("string").alias("token"), "freq", "n_sets")
-    rows = (counts.unionByName(freqs, allowMissingColumns=True)
-            .coalesce(1).limit(cap + 2).collect())
+    probe = counts.unionByName(token_freqs(tokens_df), allowMissingColumns=True).coalesce(1)
+    rows = (probe if build else probe.limit(cap + 2)).collect()
     if rows[0]["n_sets"] is None:
         raise RuntimeError("resolve_vocab: the count row must come first")
     n_records, n_sets = rows[0]["freq"], rows[0]["n_sets"]
     toks = rows[1:]
-    if toks and len(toks) <= cap:
-        ranked = sorted(toks, key=lambda r: (r["freq"], r["token"]))
-        if weighted:
-            spark = tokens_df.sparkSession
-            idf_exprs = [F.log10(F.lit(float(n_records)) / F.lit(int(r["freq"])))
-                         for r in ranked]
-            idfs = spark.range(1).select(F.array(*idf_exprs).alias("a")).first()["a"]
-        else:
-            idfs = [0.0] * len(ranked)  # no unweighted code path reads them
-        return _Vocab(inline=_InlineVocab(ranked, idfs), n_records=n_records,
-                      n_sets_approx=n_sets)
-    vocab = _Vocab(n_records=n_records, n_sets_approx=n_sets)
-    if build:
-        vocab.dictionary, vocab.n_tokens = rank_vocab(freqs, n_records)
-    return vocab
+    if not build and len(toks) > cap:
+        return _Vocab(n_records, n_sets)
+    ranked = rank_tokens(toks)
+    inline = 0 < len(ranked) <= cap
+    frame = None
+    if weighted or not inline:
+        frame = dictionary_frame(tokens_df.sparkSession, ranked, n_records)
+    idfs = None
+    if weighted:
+        idfs = [0.0] * len(ranked)
+        for tid, idf in frame.select("tid", "idf").collect():
+            idfs[tid] = idf
+    return _Vocab(n_records, n_sets, ranked, idfs,
+                  dictionary=None if inline else frame)
 
 
 def _mask_cols(tids: Column, n_words: int) -> list[Column]:
@@ -335,7 +344,7 @@ def _encode(
     (DROP_EMPTY at ``min_len=1``, the overlap join's short-record drop at
     ``c``). ``tids`` is sorted ascending, i.e. rarest-first. An inline
     vocabulary encodes by projection and adds the bitmask words; the
-    distributed dictionary encodes through ``encode_tokens``. Weighted
+    broadcast dictionary encodes through ``encode_tokens``. Weighted
     records carry the idf array aligned with ``tids`` and its sum ``wt``.
 
     Ordering/tie-breaks ride directly on ``rid`` — a deterministic key, so a
@@ -573,22 +582,17 @@ def _fused_verify(joined: DataFrame, sim: str, threshold: float, weighted: bool,
 def _join_vocab(tokens_df: DataFrame, weighted: bool) -> tuple[_Vocab, Column | None]:
     """(vocab, idf_arr) for a set join: the resolved vocabulary and, for
     weighted joins, the global tid->idf lookup as an array literal (tids are
-    dense 0..V-1) — None when the vocabulary exceeds MAX_IDF_LITERAL_ENTRIES:
-    oversized vocabularies never collect to the driver."""
+    dense 0..V-1) — None when the vocabulary exceeds MAX_IDF_LITERAL_ENTRIES."""
     vocab = resolve_vocab(tokens_df, weighted)
     if not weighted:
         return vocab, None
-    if vocab.inline is not None:
-        return vocab, vocab.inline.idf_arr
     if vocab.n_tokens > MAX_IDF_LITERAL_ENTRIES:
         log.info(
             "set_join: vocabulary exceeds %d entries — weighted verification "
             "falls back to the per-record idf map", MAX_IDF_LITERAL_ENTRIES,
         )
         return vocab, None
-    rows = sorted(vocab.dictionary.select("tid", "idf").collect(),
-                  key=lambda r: r["tid"])
-    return vocab, F.lit([float(r["idf"]) for r in rows])
+    return vocab, F.lit(vocab.idfs)
 
 
 def _group_sets(df: DataFrame, key: str,

@@ -3,14 +3,18 @@
 from __future__ import annotations
 
 import math
+import random
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from entityblockingbysimilarityjoins_spark.functions.dictionary import (
     build_dictionary,
     encode_tokens,
+    token_freqs,
 )
 from entityblockingbysimilarityjoins_spark.functions.tokenize import tokens_wspace
+from entityblockingbysimilarityjoins_spark.operators.set_join import resolve_vocab
 
 ROWS = [
     (0, "a b c"),
@@ -56,3 +60,30 @@ def test_dictionary_deterministic_across_partitionings(spark):
     a = [(r["token"], r["tid"]) for r in build_dictionary(df1).collect()]
     b = [(r["token"], r["tid"]) for r in build_dictionary(df7).collect()]
     assert sorted(a) == sorted(b)
+
+
+def test_driver_rank_matches_spark_order(spark):
+    """Over 257+ tokens (the dictionary path of the joins) the driver's
+    Python rank gives every token the tid Spark's own sort would: tied
+    frequencies, case and accent variants, CJK, and an astral-plane token
+    next to a high-BMP one (UTF-16 order puts U+1F600 first, code-point and
+    UTF-8 byte order put U+FF21 first)."""
+    special = ["a", "A", "\u00e1", "\u00c1", "\u00e0", "\u00e9", "e\u0301",
+               "\u65e5\u672c", "\u4e2d\u6587", "\ud55c\uad6d", "\uff21",
+               "\U0001f600", "\U00010000", "\ufffd", "z", "Z"]
+    vocab = [f"t{i:03d}" for i in range(250)] + special
+    occ = [t for i, t in enumerate(vocab) for _ in range(1 + i % 3)]
+    occ += ["\U0001f600"] * 2  # ties U+FF21 (and U+FFFD) at 3
+    random.Random(11).shuffle(occ)
+    rows = [(i, occ[k:k + 8]) for i, k in enumerate(range(0, len(occ), 8))]
+    df = spark.createDataFrame(rows, "rid long, tokens array<string>")
+    w = Window.orderBy("freq", "token")
+    want = {r["token"]: r["tid"] for r in token_freqs(df).select(
+        "token", (F.row_number().over(w) - 1).alias("tid")).collect()}
+    assert len(want) == len(vocab) > 256
+    assert occ.count("\uff21") == occ.count("\U0001f600") == 3
+    assert want["\uff21"] < want["\ufffd"] < want["\U0001f600"]
+    got = {r["token"]: r["tid"] for r in build_dictionary(df).collect()}
+    assert got == want
+    joined = resolve_vocab(df).dictionary
+    assert {r["token"]: r["tid"] for r in joined.collect()} == want

@@ -38,6 +38,19 @@ def test_rf_deterministic():
     assert np.array_equal(p1, p2)
 
 
+def test_rf_independent_of_row_order():
+    """A permuted copy of the training rows fits the same trees: the
+    training frame's row order depends on its plan, not on its content."""
+    X, y = _toy()
+    X[::9, 1] = np.nan  # imputed to 0.0 before the rows are ordered
+    perm = np.random.default_rng(5).permutation(len(y))
+    a = RandomForestMatcher(random_state=3).fit(X, y)
+    b = RandomForestMatcher(random_state=3).fit(X[perm], y[perm])
+    for ta, tb in zip(a.trees, b.trees, strict=True):
+        for f in ("feature", "threshold", "children_left", "children_right", "value"):
+            assert np.array_equal(getattr(ta, f), getattr(tb, f)), f
+
+
 def test_rf_nan_imputed():
     X, y = _toy()
     Xn = X.copy()

@@ -1,7 +1,7 @@
 """The set joins' size valves as contracts (ROADMAP aim 3).
 
 ``resolve_vocab`` inlines vocabularies of at most MAX_BITSET_WORDS*64 = 256
-tokens and builds the distributed dictionary beyond that. Every join must
+tokens and encodes through the broadcast dictionary beyond that. Every join must
 return the brute-force oracle's rows on both sides of the cap, so each
 check runs on corpora with exactly cap-1, cap and cap+1 distinct tokens,
 duplicate token sets included.
@@ -47,10 +47,11 @@ from entityblockingbysimilarityjoins_spark.operators.topk import (
 CAP = SJ.MAX_BITSET_WORDS * 64
 SIZES = (CAP - 1, CAP, CAP + 1)
 
-#: Spark jobs of one jac self join on the cap+1 corpus: 17 with one
-#: vocabulary pass and no set grouping on the prefix path (the probe,
-#: recount, re-probe and grouping of the earlier shape took 34)
-MAX_PREFIX_PATH_JOBS = 17
+#: Spark jobs of one jac self join on the cap+1 corpus: 11 with one
+#: vocabulary pass ranked on the driver (the distributed rank of that same
+#: aggregate took 17; the probe, recount, re-probe and set grouping of an
+#: earlier shape took 34)
+MAX_PREFIX_PATH_JOBS = 11
 
 #: Spark jobs of the grouped (all-pairs sweep) paths on the cap-1 corpus,
 #: vocabulary probe included: the self join 15, fused top-K 14 (16 when it
@@ -227,8 +228,9 @@ def _count_jobs(spark, group, action):
 
 def test_prefix_path_job_count(spark):
     """Spark jobs of one self join on the cap+1 corpus: the vocabulary is
-    probed once and ranked from the same aggregate, with no recount, no
-    re-probe and no set grouping on the prefix path."""
+    probed once and ranked on the driver from the collected aggregate, with
+    no recount, no re-probe, no distributed rank and no set grouping on the
+    prefix path."""
     df = _df(spark, _rows(CAP + 1))
     rows, n_jobs = _count_jobs(spark, "test_prefix_path_job_count", lambda:
                                set_similarity_self_join(
