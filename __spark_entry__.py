@@ -574,8 +574,9 @@ def _q_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_rf_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M2: batch-predict with the frozen seeded forest (Arrow UDF broadcast
-    scoring, matcher/random_forest.py:243; ref random_forest.py:618-780).
+    """M2: batch-predict with the frozen seeded forest (one native Column of
+    CASE trees, matcher/random_forest.predict_column; ref
+    random_forest.py:618-780).
     The oracle evaluates the SAME tree arrays as SQL CASE expressions."""
     from entityblockingbysimilarityjoins_spark.matcher.features import (
         extract_features,
@@ -1064,7 +1065,7 @@ def _sql_rf_predict() -> str:
 
     model = load_model(packaged_model_path())
     feats = {f.name: f for f in doc_features()}
-    # unrounded features feed the trees, exactly like the Arrow predict path
+    # unrounded features feed the trees, exactly like the native predict Column
     fcols = ",\n  ".join(f'{_feat_sql(feats[n])} AS "{n}"'
                          for n in model.feature_names)
     proba = forest_proba_sql(model, [f'"{n}"' for n in model.feature_names])
@@ -1077,7 +1078,7 @@ SELECT id1, id2, round(p0, 6) AS proba, p0 >= 0.5 AS "match" FROM pr"""
 def _sql_pipeline_match_res() -> str:
     """The composed chain in ONE DuckDB statement: the feature CTE of
     _sql_feature_matrix, the CASE-tree forest of _sql_rf_predict (unrounded
-    probabilities feed the 0.5 threshold, exactly like the Arrow path), and
+    probabilities feed the 0.5 threshold, exactly like the native path), and
     the recursive-CTE connected components of the connected_components
     oracle, over the predicted positives."""
     from entityblockingbysimilarityjoins_spark.matcher.persist import (

@@ -7,8 +7,9 @@ see SURVEY.md) on idiomatic Spark DataFrames:
 - blocking via exact similarity self/RS joins (Jaccard / Cosine / Dice /
   overlap-count / edit-distance / exact / absolute-norm) built from
   explode + hash-partitioned equi-joins with length, prefix and positional pruning,
-- pairwise scoring via vectorized pandas/Arrow UDF feature batches + a
-  pure-numpy random-forest matcher whose decision paths yield blocking rules,
+- pairwise scoring via native feature Columns + a pure-numpy random-forest
+  matcher that predicts as one native Column and whose decision paths yield
+  blocking rules,
 - transitive clustering via iterative large-star/small-star connected components,
 - plus web-scale pipeline extras: MinHash-LSH / SimHash / embedding near-dup
   dedup, ANN search, text quality statistics, multimodal column plumbing.

@@ -16,7 +16,7 @@ Semantics re-expressed from the reference's behavior
   touching padding, spaces, or punctuation is dropped, padding and the
   space-collapsing preamble are no-ops on the output: the q-gram set equals
   *all fully-alphanumeric q-char windows of the raw string*. We implement that
-  directly with ``sequence``/``transform`` — pure whole-stage-codegen, no UDF.
+  directly with one lookahead regex pass — no per-window lambda, no UDF.
 - ``normalize_string``: strategies 0/1/2 (collapse spaces / strip non-alnum /
   both) + lowercase (tokenizer.cc:111-142). Optional — blocking reads raw
   strings (block.cc:153 passes normalize=false), preserving the byte-identical
@@ -67,57 +67,43 @@ def tokens_alphanumeric(col: Column | str) -> Column:
     return _finish_set(F.regexp_extract_all(c, F.lit("[a-zA-Z0-9]+"), 0))
 
 
+def _qgram_windows(c: Column, q: int) -> Column:
+    """Every fully-alphanumeric q-char window of ``c``, in string order.
+
+    A zero-width lookahead matches at every position, so one
+    ``regexp_extract_all`` pass captures overlapping windows; NULL in,
+    NULL out."""
+    if q < 1:
+        raise ValueError("q-grams need q >= 1")
+    return F.regexp_extract_all(c, F.lit(f"(?=([a-zA-Z0-9]{{{q}}}))"), 1)
+
+
 def tokens_qgram(col: Column | str, q: int = 3) -> Column:
     """T2: q-grams = all fully-alphanumeric q-char windows, deduped + sorted.
 
-    Equivalent to the reference's pad+window+alnum-filter (see module doc),
-    computed as the q-windows of each MAXIMAL alphanumeric run: a window is
-    fully alphanumeric iff it lies inside one run, so one regex pass
-    (regexp_extract_all) replaces a per-gram rlike inside the HOF lambda —
-    HOF lambdas are interpreted, and the per-element regex dominated
-    tokenization cost on long documents.
+    Equivalent to the reference's pad+window+alnum-filter (see module doc).
+    The windows come from one lookahead regex pass (``_qgram_windows``).
     """
     c = F.col(col) if isinstance(col, str) else col
-    runs = F.regexp_extract_all(c, F.lit("[a-zA-Z0-9]+"), 0)
-    grams = F.flatten(F.transform(
-        runs,
-        lambda r: F.when(
-            F.length(r) >= q,
-            F.transform(F.sequence(F.lit(1), F.length(r) - F.lit(q - 1)),
-                        lambda i: r.substr(i, F.lit(q))),
-        ).otherwise(F.array().cast("array<string>")),
-    ))
-    return F.coalesce(F.array_sort(F.array_distinct(grams)), F.array().cast("array<string>"))
+    return F.coalesce(F.array_sort(F.array_distinct(_qgram_windows(c, q))),
+                      F.array().cast("array<string>"))
 
 
 def tokens_qgram_encoded(col: Column | str, q: int = 3) -> Column:
     """T2 for count-only consumers: the SAME q-gram set as ``tokens_qgram``,
     each gram packed into a long (grams are fully-alphanumeric ASCII, so
     byte-packing is injective — set cardinalities and intersection sizes are
-    identical to the string form). Int arrays keep ``array_intersect`` on
-    its specialized atomic-type fast path: no per-gram string hashing per
-    candidate pair (guide §2.3 "narrower types"; the feature matrix only
-    ever consumes (o, |a|, |b|) counts, never the gram bytes)."""
+    identical to the string form; ``"abc"`` packs to ``0x616263``). Int
+    arrays keep ``array_intersect`` on its specialized atomic-type fast path:
+    no per-gram string hashing per candidate pair (guide §2.3 "narrower
+    types"; the feature matrix only ever consumes (o, |a|, |b|) counts, never
+    the gram bytes). The packing is one flat ``transform`` over the regex
+    windows: each gram's hex bytes read as a base-16 number."""
     if q < 1 or q > 7:
         raise ValueError("encoded q-grams support 1 <= q <= 7")
     c = F.col(col) if isinstance(col, str) else col
-    runs = F.regexp_extract_all(c, F.lit("[a-zA-Z0-9]+"), 0)
-
-    def enc(r: Column, i: Column) -> Column:
-        v = None
-        for j in range(q):
-            byte = F.ascii(r.substr(i + F.lit(j), F.lit(1))).cast("long")
-            v = byte if v is None else v * F.lit(256) + byte
-        return v
-
-    grams = F.flatten(F.transform(
-        runs,
-        lambda r: F.when(
-            F.length(r) >= q,
-            F.transform(F.sequence(F.lit(1), F.length(r) - F.lit(q - 1)),
-                        lambda i: enc(r, i)),
-        ).otherwise(F.array().cast("array<long>")),
-    ))
+    grams = F.transform(_qgram_windows(c, q),
+                        lambda g: F.conv(F.hex(g), 16, 10).cast("long"))
     return F.coalesce(F.array_sort(F.array_distinct(grams)),
                       F.array().cast("array<long>"))
 

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import sim as S
-from ..functions.tokenize import tokenizer
+from ..functions.tokenize import tokenizer, tokens_qgram_encoded
 from ..operators.cache import persist_tracked
 
 
@@ -194,19 +194,14 @@ def extract_features(
     multiply referenced (SPARK-36718), so the intersect is evaluated once."""
     attrs = sorted({f.attr for f in features})
     tok_feats = {_tok_col(f): f for f in features if f.tok}
-    rec = records.select(id_col, *attrs)
-    for cname, feat in tok_feats.items():
-        if feat.tok == "qgm":
-            # the matrix only consumes (o, |a|, |b|) counts — long-packed
-            # grams intersect on the atomic-type fast path, identical sizes
-            from ..functions.tokenize import tokens_qgram_encoded
-
-            rec = rec.withColumn(cname, tokens_qgram_encoded(
-                F.col(feat.attr), int(feat.tok_settings or 3)))
-        else:
-            fn = tokenizer(feat.tok, feat.tok_settings)
-            rec = rec.withColumn(cname, fn(F.col(feat.attr)))
-    rec = rec.transform(persist_tracked)
+    # the matrix only consumes (o, |a|, |b|) counts — long-packed q-grams
+    # intersect on the atomic-type fast path, identical sizes
+    rec = records.select(id_col, *attrs).withColumns({
+        cname: (tokens_qgram_encoded(F.col(feat.attr), int(feat.tok_settings or 3))
+                if feat.tok == "qgm"
+                else tokenizer(feat.tok, feat.tok_settings)(F.col(feat.attr)))
+        for cname, feat in tok_feats.items()
+    }).transform(persist_tracked)
 
     side_cols = attrs + list(tok_feats)
     l = rec.select(F.col(id_col).alias("id1"),

@@ -4,11 +4,12 @@ The fitted forest is plain numpy arrays in the sklearn tree layout
 (children_left / children_right / feature / threshold / value — see
 ``random_forest.py``), so it serializes losslessly to JSON and, more
 importantly, **exports to ANSI SQL**: each tree becomes a nested CASE
-expression over the feature columns (NULL features imputed to 0.0 exactly
-like the Arrow predict path, reference
+expression over the feature columns (NULL features imputed to 0.0 as the
+native predict Column imputes them, reference
 ``simjoin_entitymatching/matcher/random_forest.py:660``), leaf class
 probabilities are constant literals computed at export time, and the forest
-probability is the running left-to-right mean. That lets an independent SQL
+probability is the running left-to-right mean. The SQL text and the Spark
+Column come from the same walk, ``Tree.fold``. That lets an independent SQL
 engine (the DuckDB correctness oracle) reproduce ``apply_matcher`` output
 bit-for-bit — the cross-engine evidence that batch predict (M2,
 reference ``random_forest.py:618-780``) is faithful.
@@ -25,7 +26,7 @@ import os
 
 import numpy as np
 
-from .random_forest import _LEAF, RandomForestMatcher, Tree
+from .random_forest import RandomForestMatcher, Tree
 
 
 def packaged_model_path(name: str = "frozen_rf.json") -> str:
@@ -84,30 +85,17 @@ def load_model(path: str) -> RandomForestMatcher:
         return model_from_dict(json.load(f))
 
 
-def _leaf_proba(value: np.ndarray) -> float:
-    tot = float(value[0]) + float(value[1])
-    return float(value[1]) / tot if tot > 0 else 0.5
-
-
 def tree_to_sql(tree: Tree, feature_exprs: list[str]) -> str:
     """One tree as a nested CASE expression returning the P(match) leaf value.
 
     Descent rule matches ``Tree.predict_proba``: go left iff
     ``coalesce(feature, 0.0) <= threshold`` (the NaN->0.0 imputation of the
     numpy path becomes a COALESCE)."""
-
-    def rec(node: int) -> str:
-        if tree.feature[node] == _LEAF:
-            return repr(_leaf_proba(tree.value[node]))
-        f = feature_exprs[int(tree.feature[node])]
-        thr = repr(float(tree.threshold[node]))
-        return (
-            f"(CASE WHEN coalesce({f}, 0.0) <= {thr} "
-            f"THEN {rec(int(tree.children_left[node]))} "
-            f"ELSE {rec(int(tree.children_right[node]))} END)"
-        )
-
-    return rec(0)
+    return tree.fold(
+        repr,
+        lambda f, thr, left, right: (
+            f"(CASE WHEN coalesce({feature_exprs[f]}, 0.0) <= {thr!r} "
+            f"THEN {left} ELSE {right} END)"))
 
 
 def forest_proba_sql(model: RandomForestMatcher,

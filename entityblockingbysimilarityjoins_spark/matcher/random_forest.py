@@ -9,9 +9,11 @@ threshold / value) — which is exactly what the blocking-rule extraction walks
 (reference graph.py:115-139 reads the same arrays).
 
 Spark mapping: training is driver-side (the labeled sample is small by
-construction); prediction broadcasts the fitted arrays and scores candidate
-batches inside a vectorized pandas UDF (Arrow transfer, no per-row Python) —
-replacing the reference's multiprocessing fan-out with executor parallelism.
+construction); prediction compiles the fitted arrays into one native Column
+(each tree a nested CASE over double literals, the trees summed in
+``np.mean``'s order), so scoring runs inside whole-stage codegen with no
+Python worker — replacing the reference's multiprocessing fan-out with
+executor parallelism.
 
 Conventions preserved: missing features imputed to 0.0 at train AND predict
 (random_forest.py:430,660); class_weight='balanced' emulated via sample
@@ -20,15 +22,23 @@ weights; random_state seeded for reproducibility.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import TypeVar
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 _LEAF = -1
+
+Expr = TypeVar("Expr")
+
+
+def _leaf_proba(value: np.ndarray) -> float:
+    """P(match) of a leaf, as ``Tree.predict_proba`` computes it."""
+    tot = float(value[0]) + float(value[1])
+    return float(value[1]) / tot if tot > 0 else 0.5
 
 
 @dataclass
@@ -55,6 +65,22 @@ class Tree:
         with np.errstate(invalid="ignore", divide="ignore"):
             p = np.where(tot > 0, v / np.maximum(tot, 1e-300), 0.5)
         return p[:, 1]
+
+    def fold(self, leaf: Callable[[float], Expr],
+             split: Callable[[int, float, Expr, Expr], Expr]) -> Expr:
+        """The tree as one expression: ``leaf(p)`` at each leaf,
+        ``split(feature, threshold, left, right)`` at each inner node, where
+        a row goes left iff ``x[feature] <= threshold``. The Spark Column
+        and the DuckDB SQL text are both built by this one walk."""
+
+        def rec(node: int) -> Expr:
+            if self.feature[node] == _LEAF:
+                return leaf(_leaf_proba(self.value[node]))
+            return split(int(self.feature[node]), float(self.threshold[node]),
+                         rec(int(self.children_left[node])),
+                         rec(int(self.children_right[node])))
+
+        return rec(0)
 
 
 def _gini_best_split(X: np.ndarray, y: np.ndarray, w: np.ndarray,
@@ -266,7 +292,7 @@ def train_model_active(
       the reference's three exit rules with identical constants.
 
     Driver-side like the other trainers (the labeled sample is small by
-    construction); the fitted model broadcasts into the Arrow predict UDF."""
+    construction); the fitted model compiles into ``predict_column``."""
     X = np.nan_to_num(np.asarray(X, dtype=np.float64), nan=0.0)
     y = np.asarray(y, dtype=np.int64)
     rng = np.random.default_rng(seed)
@@ -330,20 +356,24 @@ def train_model_active(
     return model
 
 
-def predict_column(model: RandomForestMatcher, feature_cols: list[str]):
-    """Vectorized pandas-UDF Column: match probability per candidate row.
+def predict_column(model: RandomForestMatcher, feature_cols: list[str]) -> Column:
+    """Native Column: the forest's match probability per candidate row.
 
-    The fitted model rides the UDF closure (Spark broadcasts it with the
-    task binary — numpy arrays, few KB)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(DoubleType())
-    def _proba(*cols: pd.Series) -> pd.Series:
-        X = np.column_stack([c.to_numpy(dtype=np.float64, na_value=np.nan)
-                             for c in cols])
-        return pd.Series(model.predict_proba(X))
-
-    return _proba(*[F.col(c) for c in feature_cols])
+    Each tree is a nested ``CASE WHEN x <= thr`` over double literals; the
+    trees are summed left to right and divided by ``n_trees``, the order of
+    ``np.mean`` over axis 0, so the value is bit-identical to
+    ``predict_proba``. The columns are compared as they are: NULL or NaN
+    must already be imputed to 0.0 (``apply_matcher`` does it once, in a
+    projection of its own, so the generated code compares plain doubles)."""
+    cols = [F.col(c) for c in feature_cols]
+    total = None
+    for tree in model.trees:
+        t = tree.fold(
+            F.lit,
+            lambda f, thr, left, right: F.when(cols[f] <= F.lit(thr), left)
+            .otherwise(right))
+        total = t if total is None else total + t
+    return total / F.lit(float(len(model.trees)))
 
 
 def apply_matcher(
@@ -353,11 +383,23 @@ def apply_matcher(
     proba_col: str = "match_proba",
     label_col: str = "match",
 ) -> DataFrame:
-    """M2: score every candidate pair; `match` boolean splits pos/neg."""
-    scored = feature_df.withColumn(
-        proba_col, predict_column(model, model.feature_names)
-    )
-    return scored.withColumn(label_col, (F.col(proba_col) >= threshold))
+    """M2: score every candidate pair; `match` boolean splits pos/neg.
+
+    The features are imputed (NULL and NaN -> 0.0, as ``np.nan_to_num`` in
+    ``predict_proba``) once per row into ``__f<i>`` columns; the optimizer
+    keeps that projection apart from the forest's because each imputed
+    column is referenced by many tree nodes. The probability and the label
+    share one forest Column in one projection: subexpression elimination
+    evaluates it once, in a generated method of its own, which keeps the
+    stage's methods under HotSpot's 8,000-byte JIT limit."""
+    imputed = [f"__f{i}" for i in range(len(model.feature_names))]
+    scored = feature_df.withColumns({
+        c: F.nanvl(F.coalesce(F.col(n).cast("double"), F.lit(0.0)), F.lit(0.0))
+        for c, n in zip(imputed, model.feature_names)
+    })
+    proba = predict_column(model, imputed)
+    return scored.withColumns({proba_col: proba,
+                               label_col: proba >= threshold}).drop(*imputed)
 
 
 def matcher_metrics(predicted: DataFrame, gold: DataFrame) -> dict:

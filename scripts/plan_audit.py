@@ -10,7 +10,10 @@ automated checks:
   the deliberately-exact brute-force / centroid-scoring ANN paths,
 - LSH band-bucket exchanges are id-only: no hashpartitioning(band, ...)
   exchange may carry an array-typed column (embedding payloads re-attach
-  AFTER candidate dedup via hash joins — r3 fix for the r2 "weak" item).
+  AFTER candidate dedup via hash joins — r3 fix for the r2 "weak" item),
+- no generated method is larger than ``HUGE_METHOD`` bytes of bytecode:
+  HotSpot does not JIT-compile such a method, so its stage runs
+  interpreted. Each query's largest method is reported.
 
 Usage: python scripts/plan_audit.py [sf_dir] [query ...]
 """
@@ -38,6 +41,18 @@ AUDIT = [
     # r5: IVF search join must exchange id-only cell keys (like LSH bands)
     "ann_ivf_topk",
 ]
+
+#: HotSpot's huge-method limit: with ``DontCompileHugeMethods`` on (the
+#: default) a larger method is never JIT-compiled
+HUGE_METHOD = 8000
+
+
+def max_method_bytes(df) -> int:
+    """Bytecode size of the largest method whole-stage codegen generated
+    for ``df``'s executed plan (ByteCodeStats of each codegen subtree)."""
+    seq = df._jdf.queryExecution().debug().codegenToSeq()
+    return max((seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())),
+               default=0)
 
 
 def _unmasked_bnlj(plan: str) -> bool:
@@ -107,8 +122,11 @@ def main() -> int:
             df._jdf.queryExecution(), "formatted"
         )
         problems = audit(name, plan)
+        method = max_method_bytes(df)
+        if method > HUGE_METHOD:
+            problems.append(f"generated method of {method} B > {HUGE_METHOD} B")
         status = "OK" if not problems else "PROBLEMS: " + "; ".join(problems)
-        print(f"== {name}: {status}")
+        print(f"== {name}: {status} (largest generated method {method} B)")
         if os.environ.get("PLAN_AUDIT_VERBOSE"):
             print(plan)
         failures += bool(problems)

@@ -7,8 +7,8 @@ efficiency = (T_N / T_4N) / 4.
 
 Job = the pipeline core at bench scale over generated pages:
   1. blocking: dlm-token Jaccard self-join on titles,
-  2. scoring: feature extraction (17 native sim columns) + numpy-RF predict
-     (Arrow pandas UDF) over every blocked pair,
+  2. scoring: feature extraction (17 native sim columns) + forest predict
+     (one native Column of CASE trees) over every blocked pair,
   3. near-dup: MinHash-LSH + exact-verify over page text,
   4. clustering: large-star/small-star connected components over matches.
 Corpus generation and model training are excluded from the timing (setup).

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from entityblockingbysimilarityjoins_spark.matcher.features import Feature
 from entityblockingbysimilarityjoins_spark.matcher.random_forest import (
@@ -122,3 +123,57 @@ def test_active_learning_trainer():
         and np.array_equal(a.feature, b.feature)
         for a, b in zip(m1.trees, m2.trees)
     )
+
+
+def _scoring_frame(spark, X: np.ndarray, null_rows: list[int]):
+    """Spark frame of X with NULL (not NaN) at ``null_rows`` of column 0."""
+    rows = [tuple(None if (j == 0 and i in null_rows) else float(v)
+                  for j, v in enumerate(r)) for i, r in enumerate(X)]
+    return spark.createDataFrame(
+        rows, ", ".join(f"f{j} double" for j in range(X.shape[1])))
+
+
+@pytest.mark.parametrize("n_trees,max_depth", [(1, 8), (9, 8), (13, 8), (50, 8),
+                                               (5, 30)])
+def test_native_forest_matches_numpy_bit_for_bit(spark, n_trees, max_depth):
+    """apply_matcher's native Column == numpy predict_proba, bit for bit:
+    NaN, NULL and ±0.0 features, features exactly at a split threshold, and
+    a deep noisy forest (the tune_matcher grid's max_depth=30 end). The
+    plan runs no Python: no ArrowEvalPython node."""
+    from entityblockingbysimilarityjoins_spark.matcher.random_forest import (
+        apply_matcher,
+    )
+
+    rng = np.random.default_rng(n_trees)
+    X, y = _toy(seed=n_trees)
+    if max_depth > 8:  # noise labels: the trees grow deep
+        X, y = rng.random((1200, 3)), rng.integers(0, 2, 1200)
+    X[rng.random(X.shape) < 0.05] = np.nan
+    names = ["f0", "f1", "f2"]
+    m = RandomForestMatcher(n_trees=n_trees, max_depth=max_depth,
+                            min_samples_leaf=1, random_state=n_trees
+                            ).fit(X, y, feature_names=names)
+    if max_depth > 8:
+        assert max(len(t.feature) for t in m.trees) > 200
+    thr = [(int(f), float(t)) for tree in m.trees
+           for f, t in zip(tree.feature, tree.threshold) if f >= 0]
+    Xs = rng.random((200, 3)) * np.array([1.0, 1.0, 9.0])
+    for i, (f, t) in enumerate(thr[:100]):
+        Xs[i, f] = t                     # exactly at a split
+    Xs[100:110] = np.nan
+    Xs[110:120, 1] = -0.0
+    Xs[120:130, 2] = 0.0
+    Xs[130:140, 0] = np.nan
+    null_rows = list(range(140, 150))
+    df = _scoring_frame(spark, Xs, null_rows).withColumn(
+        "rid", F.monotonically_increasing_id())
+    scored = apply_matcher(df, m)
+    got = scored.orderBy("rid").select("match_proba", "match").toPandas()
+    Xn = Xs.copy()
+    Xn[null_rows, 0] = np.nan
+    want = m.predict_proba(Xn)
+    assert np.array_equal(got["match_proba"].to_numpy(), want)
+    assert np.array_equal(got["match"].to_numpy(), want >= 0.5)
+    assert scored.columns == df.columns + ["match_proba", "match"]
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

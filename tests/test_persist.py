@@ -46,3 +46,20 @@ def test_forest_sql_matches_numpy_in_duckdb():
     # identical leaf constants + identical descent; only the tree-sum
     # association order can differ by an ulp
     assert np.allclose(got, expected, atol=1e-12)
+
+
+def test_forest_oracle_sql_is_frozen():
+    """The forest's DuckDB oracles are byte-identical to the text the
+    Spark Column's shared tree walk replaced; the oracle SQL is frozen."""
+    import hashlib
+
+    import __spark_entry__ as E
+
+    want = {
+        "rf_predict": "47b000901224e4f0db6e6ed9b1518f9efb610d5020039307f2b21b033fe299f1",
+        "pipeline_match_res": "532be38b82454853ecd2abf1d2f211973424224975717d296aa979f8219d2383",
+        "rematch_res": "ec7f0445ef27d8aa467f8bb29ccda669e6fd9eacf0d6fc654e88cb56bd3af538",
+    }
+    sql = E.oracle_sql()
+    got = {n: hashlib.sha256(sql[n].encode()).hexdigest() for n in want}
+    assert got == want

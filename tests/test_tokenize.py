@@ -100,3 +100,48 @@ def test_cjk_tokenizer(spark):
     assert toks[0] == sorted({"你", "好", "世", "界"})
     assert toks[1] == [] and toks[2] == []
     assert tokenizer("cjk") is tokens_cjk_char
+
+
+_ALNUM = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789")
+
+_QGRAM_PROBES = [
+    None, "", "a", "ab", "!!!---...", "a\tbc\nde\tf\r\nghi", "abcdefghij",
+    "aaaaaaaa", "x1 y22 z333 Q9999", "caféabcß straße 東京abc日本 x😀yz😀1234567",
+    "éé", "😀😀😀", "ABCdef,GHIjkl;mnopqrstu",
+]
+
+
+def _qgram_ref(s, q):
+    """Every fully-alphanumeric q-char window, sorted and distinct."""
+    if s is None:
+        return []
+    return sorted({s[i:i + q] for i in range(len(s) - q + 1)
+                   if _ALNUM.issuperset(s[i:i + q])})
+
+
+def test_qgram_matches_window_reference(spark):
+    """tokens_qgram and tokens_qgram_encoded == a pure-Python window
+    reference for q = 1..7, over NULL, empty, short, punctuation, tab /
+    newline and non-ASCII letters next to ASCII alphanumerics."""
+    df = spark.createDataFrame([(s,) for s in _QGRAM_PROBES], "s string")
+    cols = []
+    for q in range(1, 8):
+        cols += [T.tokens_qgram("s", q).alias(f"g{q}"),
+                 T.tokens_qgram_encoded("s", q).alias(f"e{q}")]
+    rows = {r["s"]: r for r in df.select("s", *cols).collect()}
+    for s in _QGRAM_PROBES:
+        for q in range(1, 8):
+            want = _qgram_ref(s, q)
+            assert rows[s][f"g{q}"] == want, (s, q)
+            assert rows[s][f"e{q}"] == [int.from_bytes(g.encode(), "big")
+                                        for g in want], (s, q)
+
+
+def test_qgram_encoded_packed_values(spark):
+    """Pinned packings: the feature values derived from them cannot drift."""
+    enc = lambda q: lambda c: T.tokens_qgram_encoded(c, q)  # noqa: E731
+    assert _apply(spark, enc(3), "abc") == [0x616263]
+    assert _apply(spark, enc(3), "abcd") == [0x616263, 0x626364]
+    assert _apply(spark, enc(1), "Z0z") == [0x30, 0x5A, 0x7A]
+    assert _apply(spark, enc(7), "zzzzzzz9") == [0x7A7A7A7A7A7A39, 0x7A7A7A7A7A7A7A]
+    assert _apply(spark, enc(3), "é-ab") == []
