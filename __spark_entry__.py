@@ -616,11 +616,17 @@ def _q_pipeline_match_res(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entityblockingbysimilarityjoins_spark.matcher.random_forest import (
         apply_matcher,
     )
+    from entityblockingbysimilarityjoins_spark.operators.cache import (
+        persist_tracked,
+    )
 
     model = load_model(packaged_model_path())
     m = extract_features(_pairs_only(spark, sf_dir), _docs(spark, sf_dir),
                          "doc_id", doc_features())
-    pos = apply_matcher(m, model).filter(F.col("match")).select("id1", "id2")
+    # scored pairs persisted before the `match` filter, as rematch_negatives
+    # does: see apply_matcher on filters over its output
+    scored = persist_tracked(apply_matcher(m, model).select("id1", "id2", "match"))
+    pos = scored.filter(F.col("match")).select("id1", "id2")
     return connected_components(pos)
 
 

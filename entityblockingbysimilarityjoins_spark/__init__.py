@@ -12,7 +12,7 @@ see SURVEY.md) on idiomatic Spark DataFrames:
   blocking rules,
 - transitive clustering via iterative large-star/small-star connected components,
 - plus web-scale pipeline extras: MinHash-LSH / SimHash / embedding near-dup
-  dedup, ANN search, text quality statistics, multimodal column plumbing.
+  dedup, ANN search and text quality statistics.
 
 All heavy computation stays JVM-side (built-in ``pyspark.sql.functions``) or in
 Arrow-batched pandas UDFs; no per-row Python in hot paths.

@@ -1,13 +1,22 @@
 """Similarity functions over token-set arrays and strings (SURVEY.md §2.3).
 
-Join-time semantics (reference ``cpp/common/simfunc.cc``): operate on deduped
-sorted token arrays; empty inputs yield 0 (pairs with empty attrs never join).
-Feature-time NaN-on-empty semantics live in ``matcher/features.py``.
+The one home of the similarity formulas, as ``cpp/common/simfunc.cc`` is the
+reference's: every set similarity is a function of the overlap ``o`` and
+the two set sizes (or IDF weights), written once in ``sim_from_counts``;
+the set joins, top-K, MinHash, the samplers and the feature matrices all
+call it on whatever (o, |a|, |b|) triple they hold (array_intersect,
+bit_count over masks, or a weighted overlap). ``PAIR_SIMS`` is the one
+dispatch of the untokenized string sims.
+
+Join-time semantics: operate on deduped sorted token arrays; a zero
+denominator yields 0 (pairs with empty attrs never join). Feature-time
+NaN-on-empty semantics live in ``matcher/features.py``.
 
 All functions here are **native Column expressions** — they stay inside
 whole-stage codegen (``array_intersect``/``size``/``levenshtein`` are JVM
-intrinsics), no Python in the hot path. Weighted (IDF) variants take a
-token-id -> idf mapping produced by ``functions.dictionary``.
+intrinsics), no Python in the hot path, except Jaro-Winkler and
+Monge-Elkan (Arrow-batched numpy). Weighted (IDF) variants take a
+token-id -> idf array produced by ``functions.dictionary``.
 
 Formulas (simfunc.cc line refs):
 - jaccard = o / (|a|+|b|-o)                    (:127)
@@ -26,32 +35,45 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def sim_from_counts(sim: str, o: Column, la: Column, lb: Column) -> Column:
+    """Set similarity ``sim`` from the overlap ``o`` and the two set sizes
+    ``la``/``lb`` — or, weighted, from W∩ and the two record weights. Every
+    ratio is 0.0 where its denominator is not positive (a bare division
+    would throw there under ANSI mode, e.g. for a record whose tokens all
+    have idf 0). ``"overlap"`` is ``o`` itself."""
+    if sim == "overlap":
+        return o
+    if sim == "jac":
+        num, denom = o, la + lb - o
+    elif sim == "cos":
+        num, denom = o, F.sqrt(la.cast("double") * lb.cast("double"))
+    elif sim == "dice":
+        num, denom = F.lit(2.0) * o, (la + lb).cast("double")
+    elif sim == "overlap_coeff":
+        num, denom = o, F.least(la, lb).cast("double")
+    else:
+        raise ValueError(f"unknown set similarity {sim!r}")
+    return F.when(denom > 0, num / denom).otherwise(F.lit(0.0))
+
+
 def overlap(a: Column, b: Column) -> Column:
     return F.size(F.array_intersect(a, b)).cast("double")
 
 
 def jaccard(a: Column, b: Column) -> Column:
-    o = overlap(a, b)
-    denom = F.size(a) + F.size(b) - o
-    return F.when(denom > 0, o / denom).otherwise(F.lit(0.0))
+    return sim_from_counts("jac", overlap(a, b), F.size(a), F.size(b))
 
 
 def cosine(a: Column, b: Column) -> Column:
-    o = overlap(a, b)
-    denom = F.sqrt(F.size(a).cast("double") * F.size(b).cast("double"))
-    return F.when(denom > 0, o / denom).otherwise(F.lit(0.0))
+    return sim_from_counts("cos", overlap(a, b), F.size(a), F.size(b))
 
 
 def dice(a: Column, b: Column) -> Column:
-    o = overlap(a, b)
-    denom = (F.size(a) + F.size(b)).cast("double")
-    return F.when(denom > 0, F.lit(2.0) * o / denom).otherwise(F.lit(0.0))
+    return sim_from_counts("dice", overlap(a, b), F.size(a), F.size(b))
 
 
 def overlap_coeff(a: Column, b: Column) -> Column:
-    o = overlap(a, b)
-    denom = F.least(F.size(a), F.size(b)).cast("double")
-    return F.when(denom > 0, o / denom).otherwise(F.lit(0.0))
+    return sim_from_counts("overlap_coeff", overlap(a, b), F.size(a), F.size(b))
 
 
 def lev_dist(a: Column, b: Column) -> Column:
@@ -68,7 +90,8 @@ def exact_match(a: Column, b: Column) -> Column:
 
 
 def absolute_norm(a: Column, b: Column) -> Column:
-    """Numeric relative similarity; inputs are string-typed numerics (simfunc.cc:297)."""
+    """Numeric relative similarity of two numbers or numeric strings
+    (simfunc.cc:297); a NULL or non-numeric side scores 0.0."""
     x, y = a.try_cast("double"), b.try_cast("double")
     mx = F.greatest(F.abs(x), F.abs(y))
     return (
@@ -81,28 +104,20 @@ def absolute_norm(a: Column, b: Column) -> Column:
 
 # ---- IDF-weighted variants ------------------------------------------------
 # idf_arr: an array<double> Column indexed by token id (token ids are dense
-# 0..V-1 by construction), typically F.lit(broadcast list) or a map column.
-
-def _idf_sum(tokens: Column, idf_arr: Column) -> Column:
-    return F.aggregate(tokens, F.lit(0.0), lambda acc, t: acc + F.element_at(idf_arr, t + 1))
-
+# 0..V-1 by construction), typically F.lit of the vocabulary's idf list.
 
 def weighted_overlap(a: Column, b: Column, idf_arr: Column) -> Column:
-    return _idf_sum(F.array_intersect(a, b), idf_arr)
+    """W∩: the idf sum over the token-id intersection."""
+    return F.aggregate(F.array_intersect(a, b), F.lit(0.0),
+                       lambda acc, t: acc + F.get(idf_arr, t))
 
 
 def weighted_overlap_coeff(a: Column, b: Column, idf_arr: Column, wa: Column, wb: Column) -> Column:
-    """W∩ / min(wa, wb); 1.0 when both record weights are ~0 (simfunc.cc:265-283)."""
-    wo = weighted_overlap(a, b, idf_arr)
+    """W∩ / min(wa, wb); 1.0 when both record weights are ~0 (simfunc.cc:265-283)
+    and 0.0 when only one is (the shared zero-denominator rule)."""
     both_zero = (F.abs(wa) < 1e-9) & (F.abs(wb) < 1e-9)
-    # guard the one-sided-zero case too: under Spark 4 ANSI mode a bare
-    # wo/least(wa,wb) throws ArithmeticException when exactly one weight is 0
-    # (all-idf-0 tokens); degrade to 0.0 like the sibling weighted sims.
-    return (
-        F.when(both_zero, F.lit(1.0))
-        .when(F.least(wa, wb) > 0, wo / F.least(wa, wb))
-        .otherwise(F.lit(0.0))
-    )
+    return F.when(both_zero, F.lit(1.0)).otherwise(
+        sim_from_counts("overlap_coeff", weighted_overlap(a, b, idf_arr), wa, wb))
 
 
 # ---- character-level string sims (scoring stage: Arrow-batched pandas UDFs) -
@@ -211,4 +226,21 @@ SET_SIMS = {
     "dice": dice,
     "overlap": overlap,
     "overlap_coeff": overlap_coeff,
+}
+
+
+def _on_strings(fn):
+    return lambda a, b: fn(a.cast("string"), b.cast("string"))
+
+
+#: the one dispatch of the untokenized pair sims (feature name -> Column fn
+#: over two raw attribute Columns); all but abs_norm compare the values as
+#: strings
+PAIR_SIMS = {
+    "lev_dist": _on_strings(lev_dist),
+    "lev_sim": _on_strings(lev_sim),
+    "exact_match": _on_strings(exact_match),
+    "abs_norm": absolute_norm,
+    "jaro_winkler": _on_strings(jaro_winkler),
+    "monge_elkan": _on_strings(monge_elkan),
 }

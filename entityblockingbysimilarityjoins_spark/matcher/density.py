@@ -16,29 +16,8 @@ from pyspark.sql import functions as F
 
 from ..functions import sim as S
 from ..functions.tokenize import tokenizer
-from ..sources.rules import Rule
-
-
-def _rule_value(rule: Rule, l: Column, r: Column,
-                tl: Column | None = None, tr: Column | None = None) -> Column:
-    """Similarity value of a single rule on a pair of raw attribute values.
-
-    ``tl``/``tr``: pre-tokenized record-side arrays — when given, the rule's
-    tokenizer never runs per candidate pair (it runs once per record in
-    ``_attach_rule_payload``), only the set sim does. Values identical."""
-    if rule.tok:
-        if tl is None:
-            fn = tokenizer(rule.tok, rule.tok_settings)
-            tl, tr = fn(l), fn(r)
-        key = {"overlap": "overlap"}.get(rule.sim, rule.sim)
-        return S.SET_SIMS[key](tl, tr)
-    if rule.sim == "lev":
-        return S.lev_dist(l.cast("string"), r.cast("string"))
-    if rule.sim == "exm":
-        return S.exact_match(l.cast("string"), r.cast("string"))
-    if rule.sim == "anm":
-        return S.absolute_norm(l, r)
-    raise ValueError(rule.sim)
+from ..sources.rules import FEATURE_SPELLING, Rule
+from .features import attach_pair_payload
 
 
 def _attach_rule_payload(pairs: DataFrame, records: DataFrame, id_col: str,
@@ -56,18 +35,18 @@ def _attach_rule_payload(pairs: DataFrame, records: DataFrame, id_col: str,
                 cname, tokenizer(r.tok, r.tok_settings)(F.col(r.attr)))
             tok_cols[i] = cname
     side_cols = attrs + [tok_cols[i] for i in sorted(tok_cols)]
-    l = rec.select(F.col(id_col).alias("id1"),
-                   *[F.col(c).alias(f"l_{c}") for c in side_cols])
-    r_ = rec.select(F.col(id_col).alias("id2"),
-                    *[F.col(c).alias(f"r_{c}") for c in side_cols])
-    return pairs.join(l, "id1").join(r_, "id2"), tok_cols
+    return attach_pair_payload(pairs, rec, id_col, side_cols), tok_cols
 
 
-def _rule_value_at(rule: Rule, i: int, tok_cols: dict[int, str]) -> Column:
-    tl = F.col(f"l_{tok_cols[i]}") if i in tok_cols else None
-    tr = F.col(f"r_{tok_cols[i]}") if i in tok_cols else None
-    return _rule_value(rule, F.col(f"l_{rule.attr}"), F.col(f"r_{rule.attr}"),
-                       tl, tr)
+def _rule_value(rule: Rule, i: int, tok_cols: dict[int, str]) -> Column:
+    """Similarity value of rule ``i`` on a payload row; a tokenized rule
+    reads the token arrays ``_attach_rule_payload`` materialized."""
+    if rule.tok:
+        return S.SET_SIMS[rule.sim](F.col(f"l_{tok_cols[i]}"), F.col(f"r_{tok_cols[i]}"))
+    name = FEATURE_SPELLING.get(rule.sim, rule.sim)
+    if name not in S.PAIR_SIMS:
+        raise ValueError(rule.sim)
+    return S.PAIR_SIMS[name](F.col(f"l_{rule.attr}"), F.col(f"r_{rule.attr}"))
 
 
 def _rule_passes(rule: Rule, value: Column) -> Column:
@@ -87,7 +66,7 @@ def estimate_rule_density(
         labeled_pairs.select("id1", "id2", "label"), records, id_col, rules)
     aggs = []
     for i, r in enumerate(rules):
-        hit = _rule_passes(r, _rule_value_at(r, i, tok_cols))
+        hit = _rule_passes(r, _rule_value(r, i, tok_cols))
         aggs += [
             F.sum((hit & (F.col("label") == 1)).cast("int")).alias(f"tp_{i}"),
             F.sum(hit.cast("int")).alias(f"pp_{i}"),
@@ -120,7 +99,7 @@ def score_pairs_by_rules(
     payload, tok_cols = _attach_rule_payload(pairs, records, id_col, rules)
     score = F.lit(0.0)
     for i, (r, w) in enumerate(zip(rules, weights)):
-        val = _rule_value_at(r, i, tok_cols)
+        val = _rule_value(r, i, tok_cols)
         contrib = F.lit(1.0) / (F.lit(1.0) + val) if r.sim == "lev" else val
         score = score + F.lit(float(w)) * contrib
     return payload.select("id1", "id2", score.alias(score_col))

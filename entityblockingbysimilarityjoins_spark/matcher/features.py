@@ -105,70 +105,26 @@ def _tok_col(feat: Feature) -> str:
     return f"__tok_{feat.attr}_{feat.tok}_{feat.tok_settings}"
 
 
-def _feature_col(feat: Feature, l: Column, r: Column,
-                 tl: Column | None = None, tr: Column | None = None,
-                 topk_normalize: bool = False) -> Column:
-    """NULL when either side is empty, else the similarity value.
-
-    ``tl``/``tr`` are pre-tokenized record-side arrays — tokenization runs
-    once per record, never per candidate pair. ``topk_normalize`` is the F4
-    top-K mode: unbounded ``overlap`` features evaluate as ``overlap_coeff``
-    so every feature the TA scorer consumes lies in [0, 1]
-    (cal_feature.cc:326-328, isTopK branch)."""
-    if feat.tok:
-        sim_key = feat.sim
-        if topk_normalize and sim_key == "overlap":
-            sim_key = "overlap_coeff"
-        val = S.SET_SIMS[sim_key](tl, tr)
-        return F.when(_empty(l) | _empty(r) | (F.size(tl) == 0) | (F.size(tr) == 0),
-                      F.lit(None).cast("double")).otherwise(val)
-    if feat.sim == "lev_dist":
-        val = S.lev_dist(l.cast("string"), r.cast("string"))
-    elif feat.sim == "lev_sim":
-        val = S.lev_sim(l.cast("string"), r.cast("string"))
-    elif feat.sim == "exact_match":
-        val = S.exact_match(l.cast("string"), r.cast("string"))
-    elif feat.sim == "abs_norm":
-        val = S.absolute_norm(l, r)
-    elif feat.sim == "jaro_winkler":
-        val = S.jaro_winkler(l.cast("string"), r.cast("string"))
-    elif feat.sim == "monge_elkan":
-        val = S.monge_elkan(l.cast("string"), r.cast("string"))
-    else:
+def _feature_col(feat: Feature, l: Column, r: Column) -> Column:
+    """NULL when either side is empty, else the untokenized similarity."""
+    if feat.sim not in S.PAIR_SIMS:
         raise ValueError(f"untokenized feature {feat.sim!r}")
-    return F.when(_empty(l) | _empty(r), F.lit(None).cast("double")).otherwise(val)
+    return F.when(_empty(l) | _empty(r), F.lit(None).cast("double")
+                  ).otherwise(S.PAIR_SIMS[feat.sim](l, r))
 
 
 def attach_pair_payload(
-    pairs: DataFrame, records: DataFrame, id_col: str, attrs: list[str]
+    pairs: DataFrame, records: DataFrame, id_col: str, cols: list[str]
 ) -> DataFrame:
-    """(id1, id2, l_<attr>..., r_<attr>...) — Megallen-style payload."""
+    """(id1, id2, ..., l_<col>..., r_<col>...): each pair with both records'
+    ``cols`` — the one payload join of every pair scorer. No join hint:
+    Catalyst broadcasts the record side while it fits and falls back to
+    sort-merge (AQE skew-aware) beyond that."""
     l = records.select(F.col(id_col).alias("id1"),
-                       *[F.col(a).alias(f"l_{a}") for a in attrs])
+                       *[F.col(c).alias(f"l_{c}") for c in cols])
     r = records.select(F.col(id_col).alias("id2"),
-                       *[F.col(a).alias(f"r_{a}") for a in attrs])
+                       *[F.col(c).alias(f"r_{c}") for c in cols])
     return pairs.join(l, "id1").join(r, "id2")
-
-
-def _sim_from_counts(sim: str, o: Column, l1: Column, l2: Column) -> Column:
-    """The SET_SIMS formulas over a precomputed (overlap, |a|, |b|) triple —
-    exactly the expressions functions.sim builds from array_intersect/size,
-    so values are bit-identical."""
-    if sim == "overlap":
-        return o
-    if sim == "jac":
-        denom = l1 + l2 - o
-        return F.when(denom > 0, o / denom).otherwise(F.lit(0.0))
-    if sim == "cos":
-        denom = F.sqrt(l1.cast("double") * l2.cast("double"))
-        return F.when(denom > 0, o / denom).otherwise(F.lit(0.0))
-    if sim == "dice":
-        denom = (l1 + l2).cast("double")
-        return F.when(denom > 0, F.lit(2.0) * o / denom).otherwise(F.lit(0.0))
-    if sim == "overlap_coeff":
-        denom = F.least(l1, l2).cast("double")
-        return F.when(denom > 0, o / denom).otherwise(F.lit(0.0))
-    raise ValueError(sim)
 
 
 def extract_features(
@@ -187,11 +143,16 @@ def extract_features(
 
     The per-pair set features are computed in TWO stacked projections: the
     first evaluates one shared (overlap, |a|, |b|) triple per tokenization,
-    the second derives every sim from that triple. All features of one
-    tokenization therefore cost ONE array_intersect per pair instead of one
-    each (e.g. 8 -> 3 for the documents feature set) — CollapseProject keeps
-    the stages separate because the triple columns are expensive and
-    multiply referenced (SPARK-36718), so the intersect is evaluated once."""
+    the second derives every sim from that triple
+    (``functions.sim.sim_from_counts``). All features of one tokenization
+    therefore cost ONE array_intersect per pair instead of one each (e.g.
+    8 -> 3 for the documents feature set) — CollapseProject keeps the
+    stages separate because the triple columns are expensive and multiply
+    referenced (SPARK-36718), so the intersect is evaluated once.
+
+    ``topk_normalize`` is the F4 top-K mode: unbounded ``overlap`` features
+    evaluate as ``overlap_coeff`` so every feature the TA scorer consumes
+    lies in [0, 1] (cal_feature.cc:326-328, isTopK branch)."""
     attrs = sorted({f.attr for f in features})
     tok_feats = {_tok_col(f): f for f in features if f.tok}
     # the matrix only consumes (o, |a|, |b|) counts — long-packed q-grams
@@ -203,14 +164,7 @@ def extract_features(
         for cname, feat in tok_feats.items()
     }).transform(persist_tracked)
 
-    side_cols = attrs + list(tok_feats)
-    l = rec.select(F.col(id_col).alias("id1"),
-                   *[F.col(c).alias(f"l_{c}") for c in side_cols])
-    r = rec.select(F.col(id_col).alias("id2"),
-                   *[F.col(c).alias(f"r_{c}") for c in side_cols])
-    # no join hint: Catalyst broadcasts the record payload while it fits
-    # and falls back to sort-merge (AQE skew-aware) beyond that
-    payload = pairs.join(l, "id1").join(r, "id2")
+    payload = attach_pair_payload(pairs, rec, id_col, attrs + list(tok_feats))
 
     # stage 1: shared per-tokenization triples (one intersect per pair each)
     mid_cols = [F.col("id1"), F.col("id2"), *[F.col(c) for c in keep_cols]]
@@ -235,13 +189,11 @@ def extract_features(
             sim_key = feat.sim
             if topk_normalize and sim_key == "overlap":
                 sim_key = "overlap_coeff"
-            val = _sim_from_counts(sim_key, o, la, lb)
+            val = S.sim_from_counts(sim_key, o, la, lb)
             cols.append(
                 F.when(_empty(lraw) | _empty(rraw) | (la == 0) | (lb == 0),
                        F.lit(None).cast("double"))
                 .otherwise(val).alias(feat.name))
         else:
-            cols.append(
-                _feature_col(feat, lraw, rraw,
-                             topk_normalize=topk_normalize).alias(feat.name))
+            cols.append(_feature_col(feat, lraw, rraw).alias(feat.name))
     return mid.select(*cols)

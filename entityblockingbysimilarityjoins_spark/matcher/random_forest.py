@@ -391,7 +391,15 @@ def apply_matcher(
     column is referenced by many tree nodes. The probability and the label
     share one forest Column in one projection: subexpression elimination
     evaluates it once, in a generated method of its own, which keeps the
-    stage's methods under HotSpot's 8,000-byte JIT limit."""
+    stage's methods under HotSpot's 8,000-byte JIT limit.
+
+    Pitfall: do not filter the returned frame on ``label_col`` directly.
+    Catalyst pushes the predicate below the projections, substituting the
+    forest (and through the imputation, every feature expression) into it
+    once per tree node, and into the candidate join's condition, where the
+    generated join method exceeds what Janino compiles and the stage falls
+    back. Persist the scored pairs first and filter the cached frame, as
+    ``interchangeable.rematch_negatives`` does."""
     imputed = [f"__f{i}" for i in range(len(model.feature_names))]
     scored = feature_df.withColumns({
         c: F.nanvl(F.coalesce(F.col(n).cast("double"), F.lit(0.0)), F.lit(0.0))

@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import sim as S
 from ..functions.tokenize import tokens_qgram, tokens_wspace
 from .cache import persist_tracked
 from .set_join import (
@@ -255,8 +256,8 @@ def minhash_lsh_pairs(
         # dense corpora collisions outnumber survivors ~50x.
         verified = (
             coll.withColumn("__o", _mask_overlap("1", "2", nw))
-            .withColumn(sim_col, F.col("__o")
-                        / (F.col("len1") + F.col("len2") - F.col("__o")))
+            .withColumn(sim_col, S.sim_from_counts("jac", F.col("__o"),
+                                                   F.col("len1"), F.col("len2")))
             .filter(F.col(sim_col) >= threshold)
             .select("rid1", "rid2", sim_col)
             .dropDuplicates(["rid1", "rid2"])
@@ -269,7 +270,8 @@ def minhash_lsh_pairs(
         verified = (
             cand.join(t1, "rid1").join(t2, "rid2")
             .withColumn("__o", F.size(F.array_intersect("t1", "t2")))
-            .withColumn(sim_col, F.col("__o") / (F.size("t1") + F.size("t2") - F.col("__o")))
+            .withColumn(sim_col, S.sim_from_counts("jac", F.col("__o"),
+                                                   F.size("t1"), F.size("t2")))
             .filter(F.col(sim_col) >= threshold)
             .select("rid1", "rid2", sim_col, "m1", "m2")
         )

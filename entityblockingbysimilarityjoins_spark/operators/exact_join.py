@@ -18,8 +18,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions import sim as S
 
 
 def exact_self_join(df: DataFrame, id_col: str, attr_col: str) -> DataFrame:
@@ -39,15 +41,6 @@ def exact_rs_join(df_r: DataFrame, df_s: DataFrame, id_col: str, attr_col: str) 
         F.col("v").isNotNull() & (F.col("v") != F.lit(""))
     )
     return l.join(r, ["v"]).select("id1", "id2")
-
-
-def _anm_sim(x: Column, y: Column) -> Column:
-    mx = F.greatest(F.abs(x), F.abs(y))
-    return (
-        F.when((x == 0) & (y == 0), F.lit(1.0))
-        .when(mx > 0, F.lit(1.0) - F.abs(x - y) / mx)
-        .otherwise(F.lit(0.0))
-    )
 
 
 def _bucketed(df: DataFrame, id_col: str, num_col: str, t: float, side: str, probe: bool) -> DataFrame:
@@ -89,7 +82,7 @@ def absolute_norm_self_join(
     return (
         l.join(r, ["bucket"])
         .filter(F.col("id1") < F.col("id2"))
-        .withColumn(sim_col, _anm_sim(F.col("v1"), F.col("v2")))
+        .withColumn(sim_col, S.absolute_norm(F.col("v1"), F.col("v2")))
         .filter(F.col(sim_col) >= threshold)
         .dropDuplicates(["id1", "id2"])
         .select("id1", "id2", sim_col)
@@ -108,7 +101,7 @@ def absolute_norm_rs_join(
     r = _bucketed(df_s, id_col, num_col, threshold, "2", probe=False)
     return (
         l.join(r, ["bucket"])
-        .withColumn(sim_col, _anm_sim(F.col("v1"), F.col("v2")))
+        .withColumn(sim_col, S.absolute_norm(F.col("v1"), F.col("v2")))
         .filter(F.col(sim_col) >= threshold)
         .dropDuplicates(["id1", "id2"])
         .select("id1", "id2", sim_col)

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import sim as S
 from ..functions.tokenize import tokens_qgram
 from .connected_components import connected_components
 from .overlap_join import overlap_rs_join, overlap_self_join
@@ -181,14 +182,9 @@ def step2_sample(
 
     r = grams(df_r, "id1", "t1")
     s = grams(df_s, "id2", "t2")
-    o = F.size(F.array_intersect("t1", "t2")).cast("double")
-    jac = F.when(
-        (F.size("t1") > 0) & (F.size("t2") > 0),
-        o / (F.size("t1") + F.size("t2") - o),
-    ).otherwise(F.lit(0.0))
     return (
         pairs.join(r, "id1").join(s, "id2")
-        .withColumn("__jac", jac)
+        .withColumn("__jac", S.jaccard(F.col("t1"), F.col("t2")))
         .filter(F.col("__jac") >= step2_tau)
         .select("id1", "id2")
     )

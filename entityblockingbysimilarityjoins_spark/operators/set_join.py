@@ -40,7 +40,9 @@ The set-level core lives here too, shared by the overlap, top-K and dedup
 operators: ``resolve_vocab`` (the one vocabulary entry), ``_encode`` (the one
 record encoder), ``_InlineVocab.encode`` (tiny-vocabulary encode),
 ``_group_sets`` (group identical sets), ``_expand_pairs`` (members back to
-record pairs) and ``_ta_score`` (the 4-sim top-K score).
+record pairs) and ``_ta_score`` (the 4-sim top-K score). The similarity
+values themselves — verify, TA score, and the alpha bound solved from them
+— come from ``functions.sim.sim_from_counts``.
 
 Scale levers (north_rule: "salted, skew-aware inverted-index self-join"):
 - prefixes hold only the rarest tokens (deterministic freq-ordered ids);
@@ -53,10 +55,13 @@ Scale levers (north_rule: "salted, skew-aware inverted-index self-join"):
 from __future__ import annotations
 
 import logging
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import sim as S
 from ..functions.dictionary import (
     dictionary_frame,
     encode_tokens,
@@ -95,30 +100,18 @@ def _short_prefix_factor(sim: str, t: float) -> float:
     raise ValueError(sim)
 
 
-def _min_overlap(sim: str, t: float, l1: Column, l2: Column) -> Column:
-    """alpha(l1,l2): minimum |A∩B| required for sim >= t."""
-    s = (l1 + l2).cast("double")
+def _min_overlap(sim: str, t: float, s1: Column, s2: Column) -> Column:
+    """alpha: the minimum overlap (weighted: W∩) that sim >= t requires of
+    two sets of sizes (weights) s1, s2 — ``functions.sim.sim_from_counts``
+    solved for o (setjoin.h:250-258 for the weighted formulas). A count
+    bound is ``ceil(alpha - eps)``; a weight bound stays real."""
     if sim == "jac":
-        v = F.lit(t / (1.0 + t)) * s
-    elif sim == "cos":
-        v = F.lit(t) * F.sqrt(l1.cast("double") * l2.cast("double"))
-    elif sim == "dice":
-        v = F.lit(t / 2.0) * s
-    else:
-        raise ValueError(sim)
-    return F.ceil(v - F.lit(_EPS))
-
-
-def _min_weighted_overlap(sim: str, t: float, w1: Column, w2: Column) -> Column:
-    """alpha_w(w1,w2): minimum IDF-weighted overlap required for sim >= t.
-    Same algebra as _min_overlap with weights in place of counts
-    (setjoin.h:250-258 weighted formulas)."""
-    s = w1 + w2
-    if sim == "jac":
-        return F.lit(t / (1.0 + t)) * s
+        return F.lit(t / (1.0 + t)) * (s1 + s2).cast("double")
     if sim == "cos":
-        return F.lit(t) * F.sqrt(w1 * w2)
-    return F.lit(t / 2.0) * s
+        return F.lit(t) * F.sqrt(s1.cast("double") * s2.cast("double"))
+    if sim == "dice":
+        return F.lit(t / 2.0) * (s1 + s2).cast("double")
+    raise ValueError(sim)
 
 
 #: vocabularies above this never inline as a plan literal (~2 MiB of doubles);
@@ -251,12 +244,12 @@ def resolve_vocab(
     from a projection over that frame, so they are the JVM's at every size.
 
     Without ``build`` the probe is LIMITed to cap + 2 rows and a vocabulary
-    beyond the cap is refused (no ranked list); its callers only ever use
-    the inline vocabulary. The count row is unioned FIRST and the union
-    coalesced to one partition, which the LIMIT reads in order: the limit
-    can only ever cut token rows, so a refusing probe still returns both
-    counts (and the probe is one result job however many partitions the
-    aggregate has)."""
+    beyond the cap is refused (no ranked list); its one caller, the MinHash
+    verify, only ever uses the inline vocabulary. The count row is unioned
+    FIRST and the union coalesced to one partition, which the LIMIT reads
+    in order: the limit can only ever cut token rows, so a refusing probe
+    still returns both counts (and the probe is one result job however many
+    partitions the aggregate has)."""
     cap = MAX_BITSET_WORDS * 64
     counts = tokens_df.agg(
         F.count("*").alias("freq"),
@@ -482,22 +475,14 @@ def _entries(
     return e
 
 
-def _sim_of(sim: str, o: Column, s1: Column, s2: Column) -> Column:
-    """sim from the (optionally weighted) overlap and the two set sizes."""
-    if sim == "jac":
-        return o / (s1 + s2 - o)
-    if sim == "cos":
-        return o / F.sqrt(s1.cast("double") * s2.cast("double"))
-    return F.lit(2.0) * o / (s1 + s2)
-
-
 def _sim_value(sim: str, weighted: bool, idf_arr: Column | None = None,
                inline: _InlineVocab | None = None) -> Column:
     """sim of a pair row from its (len|w, t|__bm) 1/2 columns — verified
     from the mask words when the vocabulary inlined."""
     n_mask = inline.n_words if inline is not None else None
     if not weighted:
-        return _sim_of(sim, _overlap(n_mask).cast("double"), F.col("len1"), F.col("len2"))
+        return S.sim_from_counts(sim, _overlap(n_mask).cast("double"),
+                                 F.col("len1"), F.col("len2"))
     w1, w2 = F.col("w1"), F.col("w2")
     if n_mask:
         # byte-LUT weighted overlap over the mask intersection — codegen.
@@ -508,28 +493,25 @@ def _sim_value(sim: str, weighted: bool, idf_arr: Column | None = None,
         for w in range(1, n_mask):
             same = same & (F.col(f"__bm{w}1") == F.col(f"__bm{w}2"))
         wo = F.when(same, w1).otherwise(inline.weighted_overlap("1", "2"))
+    elif idf_arr is not None:
+        wo = S.weighted_overlap(F.col("t1"), F.col("t2"), idf_arr)
     else:
-        def idf(t: Column) -> Column:
-            if idf_arr is not None:
-                return F.get(idf_arr, t)
-            return F.element_at(F.col("idf_map"), t)
-
         wo = F.aggregate(F.array_intersect("t1", "t2"), F.lit(0.0),
-                         lambda acc, t: acc + idf(t))
-    return _sim_of(sim, wo, w1, w2)
+                         lambda acc, t: acc + F.element_at(F.col("idf_map"), t))
+    return S.sim_from_counts(sim, wo, w1, w2)
+
+
+#: the four TA lists of topk.cc:31-95, summed in this order
+TA_SIMS = ("jac", "cos", "dice", "overlap_coeff")
 
 
 def _ta_score(o: Column, l1: Column, l2: Column) -> Column:
-    """The 4-sim TA score (jac + cos + dice + overlapCoeff, the row upper
-    bound of topk.cc:588-613) from the overlap and both set sizes — the one
-    copy of the formula, so every top-K path yields bit-identical doubles.
-    Each term is 0.0 where its denominator is."""
+    """The 4-sim TA score (the row upper bound of topk.cc:588-613) from the
+    overlap and both set sizes: the left-to-right sum of
+    ``sim_from_counts`` over TA_SIMS, so every top-K path yields
+    bit-identical doubles."""
     o, l1, l2 = o.cast("double"), l1.cast("double"), l2.cast("double")
-    jac = F.when(l1 + l2 - o > 0, o / (l1 + l2 - o)).otherwise(F.lit(0.0))
-    cos = F.when(l1 * l2 > 0, o / F.sqrt(l1 * l2)).otherwise(F.lit(0.0))
-    dice = F.when(l1 + l2 > 0, F.lit(2.0) * o / (l1 + l2)).otherwise(F.lit(0.0))
-    oc = F.when(F.least(l1, l2) > 0, o / F.least(l1, l2)).otherwise(F.lit(0.0))
-    return jac + cos + dice + oc
+    return reduce(operator.add, (S.sim_from_counts(s, o, l1, l2) for s in TA_SIMS))
 
 
 def _size_filter(sim: str, threshold: float, weighted: bool) -> Column:
@@ -558,12 +540,13 @@ def _fused_verify(joined: DataFrame, sim: str, threshold: float, weighted: bool,
     if weighted:
         # weighted analogue of the positional filter: suffix weights
         ub = F.least("suffix1", "suffix2")
-        j = j.filter(ub >= _min_weighted_overlap(sim, threshold, F.col("w1"), F.col("w2"))
+        j = j.filter(ub >= _min_overlap(sim, threshold, F.col("w1"), F.col("w2"))
                      - F.lit(_EPS))
     else:
         ub = F.lit(1) + F.least(F.col("len1") - F.col("pos1") - 1,
                                 F.col("len2") - F.col("pos2") - 1)
-        j = j.filter(ub >= _min_overlap(sim, threshold, F.col("len1"), F.col("len2")))
+        j = j.filter(ub >= F.ceil(_min_overlap(sim, threshold, F.col("len1"), F.col("len2"))
+                                  - F.lit(_EPS)))
     j = j.withColumn(sim_col, _sim_value(sim, weighted, idf_arr, inline)
                      ).filter(F.col(sim_col) >= threshold)
     extra = [ta_col] if ta_col else []

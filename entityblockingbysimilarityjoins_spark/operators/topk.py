@@ -21,26 +21,20 @@ from pyspark.sql import functions as F
 
 from .cache import persist_tracked
 from .set_join import (
-    _bm_cols,
     _expand_pairs,
     _group_sets,
-    _mask_cols,
-    _mask_overlap,
     _self_join_parts,
     _ta_score,
-    resolve_vocab,
 )
-
-#: the four TA lists of topk.cc:31-95
-TA_SIMS = ("jac", "cos", "dice", "overlap_coeff")
 
 
 def ta_score(t1: Column, t2: Column) -> Column:
     """Sum of the four TA similarities (row upper bound in topk.cc:588-613).
 
     One ``array_intersect`` evaluation; all four sims derive from the shared
-    (o, |a|, |b|) triple — identical values to summing
-    ``functions.sim.SET_SIMS``, 4x less intersection work per candidate."""
+    (o, |a|, |b|) triple (``set_join.TA_SIMS``) — identical values to
+    summing ``functions.sim.SET_SIMS``, 4x less intersection work per
+    candidate."""
     return _ta_score(F.size(F.array_intersect(t1, t2)), F.size(t1), F.size(t2))
 
 
@@ -71,22 +65,9 @@ def topk_via_ta(
         pairs.join(m.withColumnsRenamed({"__rid": "id1", "__gid": "__g1"}), "id1")
         .join(m.withColumnsRenamed({"__rid": "id2", "__gid": "__g2"}), "id2")
     )
-    # tiny-vocab scoring (see set_join): representatives encode to bitmask
-    # words via a driver-inlined literal map, and the TA score derives from
-    # (bit_count overlap, |a|, |b|), with no per-group-pair string-array
-    # intersection. Large vocabularies keep the string path. One probe job.
-    inline = resolve_vocab(t.select(F.col("toks").alias("tokens")), build=False).inline
-    if inline is not None:
-        nw = inline.n_words
-        rep = groups.select("rid", F.size("toks").alias("len"),
-                            *_mask_cols(inline.encode("toks"), nw))
-        r1, r2 = (rep.select(F.col("rid").alias(f"__g{i}"), F.col("len").alias(f"len{i}"),
-                             *_bm_cols(nw, i)) for i in ("1", "2"))
-        score = _ta_score(_mask_overlap("1", "2", nw), F.col("len1"), F.col("len2"))
-    else:
-        r1, r2 = (groups.select(F.col("rid").alias(f"__g{i}"), F.col("toks").alias(f"t{i}"))
-                  for i in ("1", "2"))
-        score = ta_score(F.col("t1"), F.col("t2"))
+    r1, r2 = (groups.select(F.col("rid").alias(f"__g{i}"), F.col("toks").alias(f"t{i}"))
+              for i in ("1", "2"))
+    score = ta_score(F.col("t1"), F.col("t2"))
     scored_gp = persist_tracked(
         p2.select("__g1", "__g2").distinct()
         .join(r1, "__g1").join(r2, "__g2")

@@ -59,19 +59,15 @@ def get_spark(
         # Let the planner pick shuffled-hash joins when the per-partition
         # build side fits (guide §9): sort-merge pays two sorts that the
         # mid-size dictionary/membership joins here never need; AQE still
-        # falls back and handles skew. Override via SPARK_GRAFT_PREFER_SMJ=1
-        # for memory-constrained executors where SHJ build sides could OOM.
-        .config("spark.sql.join.preferSortMergeJoin",
-                "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1" else "false")
+        # falls back and handles skew.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Arrow for pandas UDF exchange (feature scoring, join verification).
         # 10k-row batches: A/B-measured against 20k on the numpy scorer UDFs
         # (JW/ME bulk, minhash) — 10k was equal or faster on every rep (the
         # padded per-batch string matrices stay L2-resident), so the default
-        # stays at Spark's own. SPARK_GRAFT_ARROW_BATCH overrides for
-        # wide-row deployments.
+        # stays at Spark's own.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
         # single-JVM local mode: the "driver" heap is also every executor's
         # heap — 8g GC-thrashes 32-thread shuffles at bench scale; capped by

@@ -30,6 +30,9 @@ _SIM_ALIASES = {
     "anm": "anm", "abs_norm": "anm",
 }
 
+#: canonical sim keys whose feature-name spelling differs
+FEATURE_SPELLING = {"lev": "lev_dist", "exm": "exact_match", "anm": "abs_norm"}
+
 #: sims ordered longest-first so multi-word names win the scan
 _SIM_KEYS = sorted(_SIM_ALIASES, key=len, reverse=True)
 
@@ -103,7 +106,7 @@ def read_rules(path: str) -> list[Rule]:
 
 def write_rules(rules: list[Rule], path: str) -> None:
     def feature_name(r: Rule) -> str:
-        sim_spelling = {"lev": "lev_dist", "exm": "exact_match", "anm": "abs_norm"}.get(r.sim, r.sim)
+        sim_spelling = FEATURE_SPELLING.get(r.sim, r.sim)
         if r.tok and r.tok_settings is not None:
             tok_part = f"_{r.tok}_{r.tok_settings}_{r.tok}_{r.tok_settings}"
         elif r.tok:

@@ -167,7 +167,7 @@ def extract_features_ic(
     joins."""
     from ..functions import sim as S
     from ..functions.tokenize import tokenizer
-    from ..matcher.features import _empty
+    from ..matcher.features import _empty, attach_pair_payload
 
     attrs = sorted({f.attr for f in features})
     rec = records.select(id_col, *attrs)
@@ -210,10 +210,8 @@ def extract_features_ic(
         )
     rec = rec.transform(persist_tracked)
 
-    side_cols = [c for c in rec.columns if c != id_col]
-    l = rec.select(F.col(id_col).alias("id1"), *[F.col(c).alias(f"l_{c}") for c in side_cols])
-    r = rec.select(F.col(id_col).alias("id2"), *[F.col(c).alias(f"r_{c}") for c in side_cols])
-    payload = pairs.join(l, "id1").join(r, "id2")
+    payload = attach_pair_payload(pairs, rec, id_col,
+                                  [c for c in rec.columns if c != id_col])
 
     # shared cross-product triples: ONE array_intersect per (attr, tok) member
     # cross product, from which every sim of that tokenization derives — the
@@ -226,8 +224,6 @@ def extract_features_ic(
     # ungrouped attrs — abundant on duplicate-heavy corpora) short-circuit to
     # NULL inside the CaseWhen, so the intersect is skipped for exactly the
     # rows the per-feature `when(same_grp, ...)` used to skip it for.
-    from ..matcher.features import _sim_from_counts
-
     mid_cols = [F.col(c) for c in payload.columns]
     for attr, tok, settings in tok_keys:
         mt = f"__mtok_{attr}_{tok}_{settings}"
@@ -250,7 +246,7 @@ def extract_features_ic(
             mt = f"__mtok_{feat.attr}_{feat.tok}_{feat.tok_settings}"
             xt = F.col(f"__xt_{mt}")
             cross = F.array_max(
-                F.transform(xt, lambda t: _sim_from_counts(
+                F.transform(xt, lambda t: S.sim_from_counts(
                     feat.sim, t["o"], t["la"], t["lb"]))
             )
             if feat.sim == "overlap":
@@ -260,22 +256,18 @@ def extract_features_ic(
                 same_val = F.lit(1.0)
             val = F.when(same_grp, same_val).otherwise(cross)
         else:
+            if feat.sim not in S.PAIR_SIMS or feat.sim in ("jaro_winkler", "monge_elkan"):
+                # the Arrow-batched sims cannot run inside a lambda function
+                raise ValueError(f"untokenized feature {feat.sim!r}")
+            fn = S.PAIR_SIMS[feat.sim]
             lm, rm = F.col(f"l___mem_{feat.attr}"), F.col(f"r___mem_{feat.attr}")
             if feat.sim == "lev_dist":
                 cross = F.array_min(
                     F.flatten(F.transform(lm, lambda a: F.transform(
-                        rm, lambda b: F.abs(S.lev_dist(a.cast("string"), b.cast("string"))))))
+                        rm, lambda b: F.abs(fn(a, b)))))
                 )
                 same_val = F.lit(0.0)
             else:
-                if feat.sim == "lev_sim":
-                    fn = lambda a, b: S.lev_sim(a.cast("string"), b.cast("string"))  # noqa: E731
-                elif feat.sim == "exact_match":
-                    fn = lambda a, b: S.exact_match(a.cast("string"), b.cast("string"))  # noqa: E731
-                elif feat.sim == "abs_norm":
-                    fn = S.absolute_norm
-                else:
-                    raise ValueError(f"untokenized feature {feat.sim!r}")
                 cross = F.array_max(F.flatten(F.transform(lm, lambda a: F.transform(rm, lambda b: fn(a, b)))))
                 same_val = F.lit(1.0)
             val = F.when(same_grp, same_val).otherwise(cross)

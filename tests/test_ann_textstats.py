@@ -1,4 +1,4 @@
-"""ANN top-k vs numpy oracle; text statistics fixtures; multimodal plumbing."""
+"""ANN top-k vs numpy oracle; text statistics fixtures."""
 
 from __future__ import annotations
 
@@ -122,35 +122,6 @@ def test_winnow_fingerprint(spark):
         assert got[i] == ref(t), i
     assert set(got[5]) & set(got[6])   # shared k+w-1 run => common selection
     assert got[0] == got[7]            # case/whitespace invariant
-
-
-def test_multimodal_plumbing(spark):
-    """Fake-decoder multimodal plumbing: deterministic features per payload,
-    frame-sample fan-out, fake=False raises (no PIL/ffmpeg in container).
-    (Restored as its own named test — ADVICE r5: it had been absorbed into
-    the tail of test_winnow_fingerprint by a mis-applied edit.)"""
-    from entityblockingbysimilarityjoins_spark.operators.multimodal import (
-        decode_image_features,
-        sample_video_frames,
-    )
-    rows = [(i, "image", bytes([i]) * 100, {"src": "t"}) for i in range(10)]
-    df = spark.createDataFrame(rows, "media_id long, kind string, payload binary, meta map<string,string>")
-    feats = decode_image_features(df, fake=True)
-    out = feats.collect()
-    assert len(out) == 10 and all(r["width"] >= 64 for r in out)
-    # deterministic across runs
-    out2 = decode_image_features(df.repartition(5), fake=True).collect()
-    assert sorted((r["media_id"], r["phash"]) for r in out2) == \
-        sorted((r["media_id"], r["phash"]) for r in out)
-    frames = sample_video_frames(df, n_frames=3, fake=True)
-    assert frames.count() == 30
-    from entityblockingbysimilarityjoins_spark.operators.multimodal import (
-        decode_audio_features,
-    )
-    audio = decode_audio_features(df, fake=True).collect()
-    assert len(audio) == 10 and all(r["sample_rate"] >= 16000 for r in audio)
-    with pytest.raises(Exception):
-        decode_image_features(df, fake=False).collect()
 
 
 def test_ann_native_equals_blas(spark):

@@ -1,55 +1,14 @@
-"""Readers/writers, rule density weights, streaming dedup."""
+"""Rule density weights, streaming dedup."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from entityblockingbysimilarityjoins_spark.matcher.density import (
     estimate_rule_density,
     score_pairs_by_rules,
 )
-from entityblockingbysimilarityjoins_spark.sources.readers import (
-    read_pages,
-    read_table,
-    with_normalized,
-)
 from entityblockingbysimilarityjoins_spark.sources.rules import Rule
-from entityblockingbysimilarityjoins_spark.sources.writers import (
-    read_pair_stats,
-    write_pairs,
-)
-
-
-def test_write_pairs_chunked_with_stats(spark, tmp_path):
-    pairs = spark.range(1000).select(
-        F.col("id").alias("id1"), (F.col("id") + 10000).alias("id2"))
-    path = str(tmp_path / "blk")
-    stats = write_pairs(pairs, path, max_records_per_file=100)
-    assert stats["num_pairs"] == 1000
-    assert stats["num_chunks"] >= 10
-    assert read_pair_stats(path) == stats
-    assert spark.read.parquet(path).count() == 1000
-
-
-def test_read_table_all_strings(spark, tmp_path):
-    p = str(tmp_path / "t")
-    spark.createDataFrame([(1, 2.5)], ["a", "b"]).write.parquet(p)
-    df = read_table(spark, p, all_strings=True)
-    assert dict(df.dtypes) == {"a": "string", "b": "string"}
-
-
-def test_read_pages_validates_schema(spark, tmp_path):
-    p = str(tmp_path / "pages")
-    spark.createDataFrame([("u",)], ["url"]).write.parquet(p)
-    with pytest.raises(ValueError, match="missing columns"):
-        read_pages(spark, p)
-
-
-def test_with_normalized_keeps_raw(spark):
-    df = spark.createDataFrame([("A  B!",)], ["text"])
-    out = with_normalized(df, "text", strategy=2).collect()[0]
-    assert out["text"] == "A  B!" and out["text_norm"] == "a b"
 
 
 def test_rule_density_weights(spark):

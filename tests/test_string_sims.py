@@ -160,3 +160,96 @@ def test_vectorized_batch_matches_scalar_oracle():
     me_exp = np.array([monge_elkan_py(x or "", y or "") for x, y in pairs])
     assert np.array_equal(jw_batch(a, b), jw_exp)
     assert np.array_equal(monge_elkan_batch(a, b), me_exp)
+
+
+# ---- the one similarity algebra ------------------------------------------
+
+def _ref_from_counts(sim, o, la, lb):
+    """Python reference of every set similarity from (o, |a|, |b|): each
+    ratio is 0.0 where its denominator is not positive."""
+    if sim == "overlap":
+        return o
+    num, den = {
+        "jac": (o, la + lb - o),
+        "cos": (o, math.sqrt(float(la) * float(lb))),
+        "dice": (2.0 * o, float(la + lb)),
+        "overlap_coeff": (o, float(min(la, lb))),
+    }[sim]
+    return num / den if den > 0 else 0.0
+
+
+def _bits(x):
+    import struct
+
+    return None if x is None else struct.pack("<d", x)
+
+
+_SET_SIM_NAMES = ("jac", "cos", "dice", "overlap_coeff", "overlap")
+
+
+def test_sim_from_counts_bit_identical(spark):
+    """Integer counts (o as double, as every caller passes it) and double
+    weights, over o = 0, identical sets, one side empty, both empty and
+    zero weights."""
+    from entityblockingbysimilarityjoins_spark.functions.sim import sim_from_counts
+
+    counts = [(0.0, 3, 4), (3.0, 3, 3), (0.0, 0, 4), (0.0, 4, 0), (0.0, 0, 0),
+              (2.0, 5, 7), (1.0, 1, 10), (7.0, 9, 8)]
+    weights = [(0.0, 0.0, 0.0), (0.0, 0.0, 1.5), (0.0, 2.5, 0.0),
+               (0.7, 1.3, 2.9), (0.1 + 0.2, 0.3, 0.30000000000000004),
+               (1.2345678901234567, 3.3, 1.2345678901234567)]
+    for rows, schema in ((counts, "o double, la int, lb int"),
+                         (weights, "o double, la double, lb double")):
+        df = spark.createDataFrame(rows, schema)
+        got = df.select(*[
+            sim_from_counts(s, F.col("o"), F.col("la"), F.col("lb")).alias(s)
+            for s in _SET_SIM_NAMES]).collect()
+        for (o, la, lb), row in zip(rows, got):
+            for s in _SET_SIM_NAMES:
+                assert _bits(row[s]) == _bits(_ref_from_counts(s, o, la, lb)), (s, o, la, lb)
+
+
+def test_set_sims_over_arrays_match_reference(spark):
+    """jaccard/cosine/dice/overlap_coeff over token arrays are
+    sim_from_counts over (|a ∩ b|, |a|, |b|), empty arrays included."""
+    from entityblockingbysimilarityjoins_spark.functions.sim import SET_SIMS
+
+    rows = [(["a", "b", "c"], ["b", "c", "d", "e"]), (["a"], ["a"]),
+            ([], ["a", "b"]), ([], []), (["x", "日本"], ["日本", "y", "z"])]
+    df = spark.createDataFrame(rows, "a array<string>, b array<string>")
+    got = df.select(*[fn(F.col("a"), F.col("b")).alias(s)
+                      for s, fn in SET_SIMS.items()]).collect()
+    for (a, b), row in zip(rows, got):
+        o = float(len(set(a) & set(b)))
+        for s in SET_SIMS:
+            assert _bits(row[s]) == _bits(_ref_from_counts(s, o, len(a), len(b))), (s, a, b)
+
+
+def test_pair_sims_equal_their_direct_calls(spark):
+    """Every PAIR_SIMS entry is the sim it names, on NULL, empty, unicode and
+    numeric strings (all but abs_norm compare the values as strings)."""
+    from entityblockingbysimilarityjoins_spark.functions import sim as S
+
+    def on_strings(fn):
+        return lambda a, b: fn(a.cast("string"), b.cast("string"))
+
+    direct = {
+        "lev_dist": on_strings(S.lev_dist),
+        "lev_sim": on_strings(S.lev_sim),
+        "exact_match": on_strings(S.exact_match),
+        "abs_norm": S.absolute_norm,
+        "jaro_winkler": on_strings(S.jaro_winkler),
+        "monge_elkan": on_strings(S.monge_elkan),
+    }
+    assert set(S.PAIR_SIMS) == set(direct)
+    rows = [(None, "x"), ("x", None), (None, None), ("", ""), ("", "abc"),
+            ("日本語 テキスト", "日本 テキスト"), ("ü ß", "u ss"), ("12.5", "12"),
+            ("0", "0"), ("-3", "3"), ("same words", "same words")]
+    df = spark.createDataFrame(rows, "a string, b string")
+    cols = []
+    for name in S.PAIR_SIMS:
+        cols += [S.PAIR_SIMS[name](F.col("a"), F.col("b")).alias(f"new_{name}"),
+                 direct[name](F.col("a"), F.col("b")).alias(f"old_{name}")]
+    for r, row in zip(rows, df.select(*cols).collect()):
+        for name in S.PAIR_SIMS:
+            assert _bits(row[f"new_{name}"]) == _bits(row[f"old_{name}"]), (name, r)

@@ -167,78 +167,8 @@ def test_seeded_pvdbow_groups_value_families(spark):
     assert reps0 and reps1 and reps0.isdisjoint(reps1)
 
 
-def _family_value_pairs(spark):
-    import random
-
-    rng = random.Random(5)
-    fams = [["ultrabook", "pro", "laptop", "15", "inch", "slim"],
-            ["kitchen", "mixer", "deluxe", "500", "watt", "steel"]]
-    vals = [[" ".join(rng.sample(f, rng.randint(3, 5))) for _ in range(25)]
-            for f in fams]
-    pairs = [(a, b) for fam in vals
-             for a, b in zip(fam, fam[1:])] + [(vals[0][0], vals[1][0])]
-    vp = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in pairs if a != b], ["v1", "v2"])
-    return vp, vals
-
-
-def test_w2v_and_fasttext_group_value_families(spark):
-    """V10 word2vec / fastText backends: same grouping contract as V1 —
-    token families group, unrelated families stay apart."""
-    from entityblockingbysimilarityjoins_spark.value_matcher.word2vec import (
-        group_values_w2v,
-    )
-
-    vp, vals = _family_value_pairs(spark)
-    # fastText's subword composition raises the cosine floor between ANY two
-    # values (shared char n-grams + bucket collisions), so its tau sits
-    # higher: within-family cosines here are >=0.98, cross-family ~0.7.
-    for backend, tau in (("word2vec", 0.6), ("fasttext", 0.85)):
-        groups = group_values_w2v(vp, tau=tau, backend=backend, seed=1,
-                                  epochs=40)
-        g = {r["value"]: r["representative"] for r in groups.collect()}
-        reps0 = {g[v] for v in vals[0] if v in g}
-        reps1 = {g[v] for v in vals[1] if v in g}
-        assert reps0 and reps1 and reps0.isdisjoint(reps1), backend
-
-
-def test_fasttext_oov_subword_composition():
-    """The fastText property the reference relies on: a word never seen in
-    training still embeds via its char n-grams, landing nearer its clean
-    sibling than an unrelated word. Plain word2vec returns None for OOV."""
-    import numpy as np
-
-    from entityblockingbysimilarityjoins_spark.value_matcher.word2vec import (
-        SeededFastText,
-        SeededWord2Vec,
-    )
-
-    docs = [["ultrabook", "laptop", "slim"], ["kitchen", "mixer", "steel"],
-            ["ultrabook", "pro", "laptop"], ["kitchen", "deluxe", "mixer"]] * 10
-    ft = SeededFastText(epochs=40, seed=3).fit(docs)
-    w2v = SeededWord2Vec(epochs=40, seed=3).fit(docs)
-
-    assert w2v.word_vector("ultrabok") is None  # OOV: no vector at all
-    v_typo = ft.word_vector("ultrabok")         # OOV: composed from n-grams
-    assert v_typo is not None
-
-    def cos(a, b):
-        na, nb = np.linalg.norm(a), np.linalg.norm(b)
-        return float(a @ b / (na * nb)) if na and nb else 0.0
-
-    sib = cos(v_typo, ft.word_vector("ultrabook"))
-    far = cos(v_typo, ft.word_vector("kitchen"))
-    assert sib > far
-
-    # determinism across instances (crc32 buckets, seeded rng): same corpus
-    # + seed => byte-identical vectors
-    ft2 = SeededFastText(epochs=40, seed=3).fit(docs)
-    assert np.array_equal(ft.word_vector("ultrabok"),
-                          ft2.word_vector("ultrabok"))
-
-
 def test_value_vocab_valve_refuses_oversized(spark, monkeypatch):
-    """The driver-side embedding trainers probe-then-refuse vocabularies
+    """The driver-side doc2vec trainer probes-then-refuses vocabularies
     beyond MAX_VALUE_VOCAB instead of collecting them (guide §5)."""
     import pytest
 
@@ -246,16 +176,11 @@ def test_value_vocab_valve_refuses_oversized(spark, monkeypatch):
     from entityblockingbysimilarityjoins_spark.value_matcher.doc2vec import (
         doc2vec_value_vectors,
     )
-    from entityblockingbysimilarityjoins_spark.value_matcher.word2vec import (
-        word2vec_value_vectors,
-    )
 
     values = spark.createDataFrame([(f"v{i}",) for i in range(12)], "value string")
     monkeypatch.setattr(d2v, "MAX_VALUE_VOCAB", 10)
     with pytest.raises(ValueError, match="MAX_VALUE_VOCAB"):
         doc2vec_value_vectors(values, "value", epochs=1)
-    with pytest.raises(ValueError, match="MAX_VALUE_VOCAB"):
-        word2vec_value_vectors(values, "value", epochs=1)
-    # under the cap both still train
+    # under the cap it still trains
     small = spark.createDataFrame([(f"v{i}",) for i in range(5)], "value string")
     assert doc2vec_value_vectors(small, "value", epochs=1).count() == 5
